@@ -1187,19 +1187,17 @@ class TripleStore(
         if (limit > TripleStore.TopKLiteralCap) None
         else {
           val gen = ValueIndex.resolveGeneration(spark, t)
-          // ONE manifest collect serves the whole probe: the stats
-          // feed (a) the memo validation — the attr's manifest total
-          // is the generation-CONTENT check; a mismatch means the
-          // index moved under this live instance (out-of-band append,
-          // see ascProofMemo's doc) and the cached proof must not be
-          // trusted — (b) the universe proof on a memo miss, and
-          // (c) the probe's own threshold walk, which needed the same
-          // collect anyway. A memo HIT therefore pays no manifest
-          // round-trip beyond the probe's inherent one — and that one
-          // is itself listing-validated (ValueIndex.bucketStatsCached),
-          // so steady-state serving costs one filesystem LIST, not a
+          // ONE fold over the generation's manifest snapshot serves
+          // the whole probe: the stats feed (a) the memo validation —
+          // the attr's manifest total is the generation-CONTENT check;
+          // a mismatch means the index moved under this live instance
+          // (out-of-band append, see ascProofMemo's doc) and the
+          // cached proof must not be trusted — (b) the universe proof
+          // on a memo miss, and (c) the probe's own threshold walk. The
+          // snapshot is listing-validated (ValueIndex.snapshot), so
+          // steady-state serving costs one filesystem LIST, not a
           // Spark job.
-          val stats = ValueIndex.bucketStatsCached(spark, gen, t, attr)
+          val stats = gen.bucketStats(attr)
           if (stats.isEmpty) None
           else {
             val curTotal = stats.map(_._4).sum
@@ -1893,7 +1891,16 @@ class TripleStore(
     * it is computed (property-tested against [[reachable]] on random
     * dense graphs, concurrent path included). A failed batch
     * (maxFrontier trip) propagates after in-flight batches drain, so
-    * the shared edge cache is never dropped under a live job. */
+    * the shared edge cache is never dropped under a live job.
+    *
+    * The trip condition is RELAXED when every batch would be in flight
+    * at once (nBatches ≤ batchParallelism): the batches then merge into
+    * ONE BFS whose cap is `maxFrontier × nBatches`, judged on the merged
+    * frontier. The documented peak-state bound is unchanged, but a root
+    * set with one skewed batch that alone would exceed `maxFrontier`
+    * now passes whenever the merged frontier stays under the scaled
+    * cap. A caller that needs the per-batch trip keeps nBatches above
+    * `batchParallelism` (a smaller `rootBatchSize` or parallelism). */
   def reachableBatched(
       roots: DataFrame,
       attrs: Option[Seq[String]] = None,

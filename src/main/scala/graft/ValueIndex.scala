@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.Triples
 
@@ -50,8 +51,10 @@ import graft.model.Triples
   * never correctness. The final order always uses the NATIVE column
   * (vlong / vdbl / vstr / vts), exact at full precision.
   *
-  * Scale shape at 100 TB: the manifest is O(attrs × buckets) rows (a
-  * broadcast-sized driver read), the probe scans O(k + bucket width)
+  * Scale shape at 100 TB: the manifest is O(attrs × buckets × appends
+  * since the last compact) rows, held on the driver as ONE cached
+  * snapshot per generation that every manifest question folds over
+  * (see [[snapshots]]), the probe scans O(k + bucket width)
   * rows instead of every fact of the attribute, and the build is one
   * linear pass (quantile sketch + range shuffle) paid once and
   * append-maintained after ([[append]] never rewrites or re-reads the
@@ -128,6 +131,30 @@ object ValueIndex {
     * loud rebuild message (instead of a confusing view-has-no-location
     * error). Never written. */
   private[graft] val PathProp = "graft.vidx.path"
+
+  /** The v$Fmt data-tree schema, partition columns (`a`, `bkt`) included.
+    * Every read of an index path pins it (and [[ManifestSchema]]), so
+    * opening a generation lists files but never runs a parquet
+    * schema-inference job. */
+  private val DataSchema = StructType(Seq(
+    StructField("e", StringType), StructField("vlong", LongType),
+    StructField("vdbl", DoubleType), StructField("vstr", StringType),
+    StructField("vts", TimestampNTZType), StructField("vnum", DoubleType),
+    StructField("txId", LongType), StructField("a", StringType),
+    StructField("bkt", IntegerType)))
+
+  /** The v$Fmt manifest schema ([[manifestOf]]'s columns). A legacy
+    * manifest missing a column reads it as null: a missing `fmt` fails
+    * every reader's format gate, and `maxtx`/`suml` only ever go missing
+    * on manifests stamped below v4/v6, which those gates reject. */
+  private val ManifestSchema = StructType(Seq(
+    StructField("minv", DoubleType), StructField("maxv", DoubleType),
+    StructField("cnt", LongType), StructField("maxtx", LongType),
+    StructField("fmt", IntegerType), StructField("suml", LongType),
+    StructField("a", StringType), StructField("bkt", IntegerType)))
+
+  private def readData(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(DataSchema).parquet(path)
 
   private[graft] def encodePathHex(p: String): String =
     p.getBytes("UTF-8").map("%02x".format(_)).mkString
@@ -219,8 +246,7 @@ object ValueIndex {
   private def writeLayout(data: DataFrame, path: String): Unit = {
     data.repartition(col("a"), col("bkt"))
       .sortWithinPartitions(col("a"), col("bkt"), col("vnum"))
-      .select(col("e"), col("vlong"), col("vdbl"), col("vstr"),
-        col("vts"), col("vnum"), col("txId"), col("a"), col("bkt"))
+      .select(DataSchema.fieldNames.toSeq.map(col): _*)
       .write.mode("overwrite").partitionBy("a", "bkt").parquet(path)
     manifestOf(data)
       .write.mode("overwrite").parquet(path + "_manifest")
@@ -285,24 +311,16 @@ object ValueIndex {
   def append(batch: TripleStore, table: String): Unit = {
     val spark = batch.spark
     val path = dataPathOf(spark, table)
-    // cut harvest + format check in ONE bounded collect over the
-    // manifest (collect_list skips the nulls the fmt guard injects —
-    // moot once the stale counter requires zero)
-    val rows = spark.read.parquet(path + "_manifest")
-      .groupBy(col("a"))
-      .agg(sort_array(collect_list(
-          when(col("fmt") === Fmt, col("minv")))).as("cuts"),
-        sum(when(col("fmt") =!= Fmt, lit(1L)).otherwise(lit(0L)))
-          .as("stale"))
-      .collect()
-    require(rows.forall(_.getLong(2) == 0L),
-      s"valueIndex $table holds pre-v$Fmt manifest rows — rebuild with " +
-        "ValueIndex.build before appending (mixed-format rows would " +
-        "poison probes)")
-    val cuts: Map[String, Seq[Double]] = rows
-      // drop the lowest bucket's min: k cut points make k+1 buckets,
-      // and values below every cut belong in bucket 0
-      .map(r => r.getString(0) -> r.getSeq[Double](1).toSeq.drop(1)).toMap
+    // format check + cut harvest, both folds over the manifest snapshot
+    val man = snapshot(spark, path)
+    requireCurrent(man, table, " before appending (mixed-format rows " +
+      "would poison probes)")
+    val cuts: Map[String, Seq[Double]] = man.groupBy(_.a).map {
+      case (a, rs) =>
+        // drop the lowest bucket's min: k cut points make k+1 buckets,
+        // and values below every cut belong in bucket 0
+        a -> rs.map(_.minv).sortWith(cmp(_, _) < 0).toSeq.drop(1)
+    }
     require(cuts.nonEmpty, s"valueIndex $table has an empty manifest")
     // same declared-type fact filter as build (see build's comment)
     val typedFacts = cuts.keys.toSeq.map(a => col("a") === a &&
@@ -316,8 +334,7 @@ object ValueIndex {
       .persist()
     try {
       val data = base.withColumn("bkt", bucketOf(cuts))
-      data.select(col("e"), col("vlong"), col("vdbl"), col("vstr"),
-          col("vts"), col("vnum"), col("txId"), col("a"), col("bkt"))
+      data.select(DataSchema.fieldNames.toSeq.map(col): _*)
         .write.mode("append").partitionBy("a", "bkt").parquet(path)
       manifestOf(data)
         .write.mode("append").parquet(path + "_manifest")
@@ -455,19 +472,23 @@ object ValueIndex {
     * it — must share, so the pair can never straddle a concurrent
     * [[compact]] (which swaps the location property to a NEW path; two
     * independent resolves could prove the universe against the old
-    * generation and probe the new). Frames are built lazily so a
-    * manifest format error surfaces before the data path is touched.
-    * `path` is the resolved data location when the generation came
-    * from a view's location property — the key of the bucket-stats
-    * cache; None (legacy per-name resolution) probes uncached. */
-  private[graft] final class Gen(val man: () => DataFrame,
-    val dat: () => DataFrame, val path: Option[String] = None)
+    * generation and probe the new). The manifest is read at most once
+    * per Gen, on first use, so a format error surfaces before the data
+    * path is touched and every bucket question one probe asks is
+    * answered from the same rows. */
+  private[graft] final class Gen(table: String,
+      readManifest: () => Array[ManRow], val dat: () => DataFrame) {
+    lazy val manifest: Array[ManRow] = readManifest()
+    def bucketStats(attr: String): Array[BucketStat] =
+      ValueIndex.bucketStats(manifest, table, attr)
+  }
 
   /** Resolve the probe-facing generation. A view-registered index
     * resolves BOTH frames from one read of the location property — the
-    * snapshot-consistency half of the atomic-swap story; anything else
-    * falls back to per-name catalog resolution (legacy tables, specs
-    * that hand-build manifests). */
+    * snapshot-consistency half of the atomic-swap story — and reads its
+    * manifest through the [[snapshot]] cache; anything else falls back
+    * to per-name catalog resolution (legacy tables, specs that
+    * hand-build manifests), collected uncached. */
   private[graft] def resolveGeneration(spark: SparkSession,
       table: String): Gen = {
     val at: Option[String] =
@@ -476,10 +497,9 @@ object ValueIndex {
         .getTableMetadata(TableIdentifier(table)))
     at match {
       case Some(p) =>
-        new Gen(() => spark.read.parquet(p + "_manifest"),
-          () => spark.read.parquet(p), Some(p))
+        new Gen(table, () => snapshot(spark, p), () => readData(spark, p))
       case None =>
-        new Gen(() => spark.table(table + "_manifest"),
+        new Gen(table, () => collectManifest(spark.table(table + "_manifest")),
           () => spark.table(table))
     }
   }
@@ -510,7 +530,6 @@ object ValueIndex {
   def compact(spark: SparkSession, table: String, newPath: String,
       nBuckets: Int = 64): (String, String) = {
     val oldPath = dataPathOf(spark, table)
-    val man = spark.read.parquet(oldPath + "_manifest")
     // compact is v$Fmt-ONLY: it consumes data rows that build/append
     // wrote under the current format, whose invariant (declared-type
     // fact filter — rows whose declared value column is null were
@@ -521,12 +540,9 @@ object ValueIndex {
     // would launder a type-drifted stray into a tree whose counts the
     // pushdowns trust. So any non-current row forces a rebuild from
     // the store, which re-runs the filter by construction.
-    require(man.columns.contains("fmt") &&
-        man.where(!col("fmt").isin(DataCompatFmts.toSeq: _*)).isEmpty,
-      s"valueIndex $table holds non-v$Fmt rows — rebuild it with " +
-        "ValueIndex.build (compact migrates no foreign formats: only " +
-        "a rebuild from the store re-applies the declared-type fact " +
-        "filter the aggregate pushdowns rely on)")
+    requireCurrent(snapshot(spark, oldPath), table, " (compact migrates " +
+      "no foreign formats: only a rebuild from the store re-applies the " +
+      "declared-type fact filter the aggregate pushdowns rely on)")
     // RECONCILE UPSERTS: append never reads the existing corpus, so a
     // batch that re-asserted a card-one attr for an already-indexed
     // entity left the stale row beside the new one (probes between that
@@ -534,7 +550,7 @@ object ValueIndex {
     // (a, e) — map-side-combinable max_by, shadow+native tie-break for
     // determinism on equal-tx duplicates — exactly the store's own
     // latest-tx-wins resolution, applied to the index's rows.
-    val latest = spark.read.parquet(oldPath)
+    val latest = readData(spark, oldPath)
       .groupBy(col("a"), col("e"))
       .agg(max_by(
         struct(col("vlong"), col("vdbl"), col("vstr"), col("vts"),
@@ -561,12 +577,11 @@ object ValueIndex {
         catch { case r: Throwable => e.addSuppressed(r) }
         throw e
       }
-      // the swap supersedes the old generation: its statsCache entries
-      // (keyed by the OLD path) can never be read again — probes
-      // resolve the new location — so drop them now rather than leak
-      // one Array[BucketStat] per attr per compaction for the JVM's
-      // lifetime in a long-running service
-      statsCache.keySet.filter(_._1 == oldPath).foreach(statsCache.remove)
+      // the swap supersedes the old generation: its snapshot (keyed by
+      // the OLD path) can never be read again — probes resolve the new
+      // location — so drop it now rather than leak one manifest per
+      // compaction for the JVM's lifetime in a long-running service
+      snapshots.remove(oldPath)
       (oldPath, oldPath + "_manifest")
     } finally base.unpersist()
   }
@@ -600,42 +615,149 @@ object ValueIndex {
           col("_sumd").cast("long")).as("suml"),
         col("a"), col("bkt"))
 
-  /** The largest txId any indexed fact carries — read from the MANIFEST
-    * (every build/append/compact batch stamps its max onto the rows it
-    * writes), so a caller minting the next append's txId pays
-    * O(manifest), never a corpus scan. 0 when the index is empty. */
-  private[graft] def maxTx(spark: SparkSession, table: String): Long = {
-    val m = resolveGeneration(spark, table).man()
-    require(m.columns.contains("maxtx"),
-      s"valueIndex $table predates format v$Fmt — rebuild it with " +
-        "ValueIndex.build (older manifests carry no maxtx bookkeeping)")
-    Option(m.agg(max(col("maxtx"))).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
+  /** One manifest row on the driver, read through [[ManifestSchema]].
+    * `fmt`, `maxtx` and `suml` are None where the row holds a null: a
+    * legacy manifest without the column, or (suml only) a non-long attr
+    * or a bucket total outside the long range. The other fields fall
+    * back to NaN / 0 only on legacy rows, which no format gate admits. */
+  private[graft] final case class ManRow(a: String, bkt: Int, minv: Double,
+      maxv: Double, cnt: Long, maxtx: Option[Long], fmt: Option[Int],
+      suml: Option[Long])
+
+  /** Collect a manifest frame into driver rows: ONE plain scan, no
+    * aggregate. The frame is projected onto [[ManifestSchema]] first, so
+    * a per-name legacy manifest lacking a column reads it as null exactly
+    * as a pinned path read does. */
+  private def collectManifest(man: DataFrame): Array[ManRow] = {
+    val have = man.columns.toSet
+    man.select(ManifestSchema.fields.toSeq.map(f =>
+        (if (have(f.name)) col(f.name) else lit(null))
+          .cast(f.dataType).as(f.name)): _*)
+      .collect()
+      .map { r =>
+        def opt[T](c: String): Option[T] =
+          Option(r.get(r.fieldIndex(c))).map(_.asInstanceOf[T])
+        ManRow(r.getString(r.fieldIndex("a")), opt[Int]("bkt").getOrElse(0),
+          opt[Double]("minv").getOrElse(Double.NaN),
+          opt[Double]("maxv").getOrElse(Double.NaN),
+          opt[Long]("cnt").getOrElse(0L), opt[Long]("maxtx"),
+          opt[Int]("fmt"), opt[Long]("suml"))
+      }
   }
 
-  /** Per-attr indexed-fact counts summed from the MANIFEST — the
-    * receipt the CLI build/append verbs print, O(manifest) like
+  /** Manifest SNAPSHOTS per generation (data) path: the raw manifest
+    * rows, O(attrs × buckets × appends since the last compact), so
+    * driver-sized. Every manifest question (bucket stats, health,
+    * the valve's frag, append's cut harvest, the format gates, maxTx,
+    * fact counts) is a fold over the snapshot, so one plain scan serves
+    * all of them until the manifest changes. An entry is VALIDATED by
+    * the manifest directory's file listing ([[manifestFingerprint]]):
+    * every mutation that can change the manifest changes the listing —
+    * [[append]] adds NEW part files (parquet files are immutable and
+    * Spark mints fresh UUID names per write), [[build]]/[[compact]]
+    * write a fresh tree (compact under a NEW path, so even the key
+    * moves). A warm read therefore pays ONE filesystem LIST (a single
+    * RPC on an object store, sub-ms locally) instead of a scheduled
+    * Spark job — the dominant fixed cost of zone-map probes and of the
+    * valve on small-to-mid corpora, and the steady-state serving cost at
+    * 100 TB. Unlike a blind per-path memo, the listing check also
+    * catches the OUT-OF-BAND append the asc-proof memo defends against
+    * (the hazard mutates the path in place — and in doing so adds
+    * files). Bounded: one entry per live index generation ([[compact]]
+    * evicts the superseded one). */
+  private val snapshots = scala.collection.concurrent.TrieMap
+    .empty[String, (String, Array[ManRow])]
+
+  /** Test hook: the generation paths currently held by [[snapshots]] —
+    * pins compact's eviction of superseded paths. */
+  private[graft] def snapshotCacheKeys: Set[String] = snapshots.keySet.toSet
+
+  /** name:length:mtime fingerprint of the manifest directory listing —
+    * the snapshot-validation token. Missing dir fingerprints to "" (the
+    * read in [[snapshot]] then fails loud on its own). */
+  private def manifestFingerprint(spark: SparkSession,
+      path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path + "_manifest")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) ""
+    else fs.listStatus(p)
+      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+      .sorted.mkString("\n")
+  }
+
+  /** The manifest rows of the generation at `path`, through
+    * [[snapshots]]. The fingerprint is taken BEFORE the scan, so a
+    * concurrent append can only make a cached snapshot look stale,
+    * never make a stale one look current. */
+  private def snapshot(spark: SparkSession, path: String): Array[ManRow] = {
+    val fp = manifestFingerprint(spark, path)
+    snapshots.get(path) match {
+      case Some((f, rows)) if f == fp => rows
+      case _ =>
+        val rows = collectManifest(
+          spark.read.schema(ManifestSchema).parquet(path + "_manifest"))
+        snapshots.put(path, (fp, rows))
+        rows
+    }
+  }
+
+  /** The null-safe format gate the manifest readers share: a row not
+    * stamped with the current format — a null stamp included, which is
+    * how a manifest with no `fmt` column reads — fails LOUD with the
+    * rebuild message. Silently skipping stale rows would report (or
+    * probe) an index whose other readers are about to refuse. */
+  private def requireCurrent(man: Array[ManRow], table: String,
+      why: String = ""): Unit =
+    require(man.forall(_.fmt.contains(Fmt)),
+      s"valueIndex $table holds pre-v$Fmt manifest rows — rebuild with " +
+        s"ValueIndex.build$why")
+
+  /** ALL driver-side shadow comparisons use java.lang.Double.compare —
+    * the total order with NaN LARGEST, which is exactly Spark SQL's
+    * ordering AND predicate semantics for NaN. Scala's IEEE operators
+    * would disagree (NaN >= t is false), silently pruning the bucket
+    * holding a double attr's NaN facts out of a desc scan while the
+    * fallback ranks them first. (String shadows are always finite —
+    * the NaN analysis is vacuous there.) */
+  private def cmp(a: Double, b: Double): Int = java.lang.Double.compare(a, b)
+  private def shadowMin(xs: Array[Double]): Double =
+    xs.reduce((x, y) => if (cmp(x, y) <= 0) x else y)
+  private def shadowMax(xs: Array[Double]): Double =
+    xs.reduce((x, y) => if (cmp(x, y) >= 0) x else y)
+
+  /** The largest txId any indexed fact carries — read from the MANIFEST
+    * (every build/append/compact batch stamps its max onto the rows it
+    * writes), so a caller minting the next append's txId pays a fold
+    * over the snapshot, never a corpus scan. 0 when the index is empty. */
+  private[graft] def maxTx(spark: SparkSession, table: String): Long = {
+    val m = resolveGeneration(spark, table).manifest
+    // maxtx arrived in v4: an unstamped or older row carries none
+    require(m.forall(_.fmt.exists(_ >= 4)),
+      s"valueIndex $table predates format v$Fmt — rebuild it with " +
+        "ValueIndex.build (older manifests carry no maxtx bookkeeping)")
+    m.flatMap(_.maxtx).maxOption.getOrElse(0L)
+  }
+
+  /** Per-attr indexed-fact counts summed from the MANIFEST snapshot —
+    * the receipt the CLI build/append verbs print, O(manifest) like
     * [[maxTx]] (the v4 receipt ran groupBy().count() over the full
     * index: an O(index) scan four lines after append's own "must stay
     * O(batch)" argument — at 100 TB the receipt dwarfed the append).
     * Counts include not-yet-compacted upsert duplicates, exactly as
-    * counting the data rows would. Fails LOUD on any pre-v5 manifest
-    * row, same as [[stats]]/[[bucketStats]] — silently excluding stale
-    * rows would print an under-counted receipt for an index whose
-    * first probe is about to refuse with the rebuild message. */
+    * counting the data rows would. Fails LOUD on any non-current
+    * manifest row, same as [[stats]]/[[bucketStats]] — silently
+    * excluding stale rows would print an under-counted receipt for an
+    * index whose first probe is about to refuse with the rebuild
+    * message. */
   private[graft] def factCounts(spark: SparkSession,
       table: String): DataFrame = {
-    val m = resolveGeneration(spark, table).man()
-    require(m.columns.contains("cnt") && m.columns.contains("fmt"),
-      s"valueIndex $table has no manifest counts — rebuild with " +
-        "ValueIndex.build")
-    require(m.where(col("fmt") =!= Fmt).isEmpty,
-      s"valueIndex $table holds pre-v$Fmt manifest rows — rebuild with " +
-        "ValueIndex.build (receipts and probes must agree on the " +
-        "rebuild story)")
-    m.groupBy(col("a").as("attr"))
-      .agg(sum(col("cnt")).as("n_facts"))
-      .select(lit(table).as("table"), col("attr"), col("n_facts"))
+    val m = resolveGeneration(spark, table).manifest
+    requireCurrent(m, table, " (receipts and probes must agree on the " +
+      "rebuild story)")
+    import spark.implicits._
+    m.groupBy(_.a).toSeq.sortBy(_._1)
+      .map { case (a, rs) => (table, a, rs.map(_.cnt).sum) }
+      .toDF("table", "attr", "n_facts")
   }
 
   /** One bucket summary row: (bkt, min shadow, max shadow, fact count,
@@ -648,116 +770,48 @@ object ValueIndex {
     * build/compact ⟺ the layout holds one row per (a, e) — the
     * PRISTINE state exact-membership probes require. The suml field is
     * the materialized per-bucket SUM of native long values (None for
-    * non-long attrs) the sum pushdown reads. */
+    * non-long attrs, and whenever a row's sum is missing or the total
+    * leaves the long range) the sum pushdown reads. */
   private[graft] type BucketStat = (Int, Double, Double, Long, Long,
     Option[Long])
 
-  /** Per-bucket [[BucketStat]]s for `attr`, in ONE bounded collect that
-    * doubles as the format gate: ANY manifest row for the attr carried
-    * by a non-current format fails LOUD up front — aggregating only
-    * current-format rows while the data scan reads every file would
-    * silently drop top-k rows living in buckets the stale manifest rows
-    * describe. Empty result = attr not indexed (the caller's
-    * decline-to-fallback case). private[graft] so [[TripleStore]]'s
-    * asc-proof path collects ONCE and threads the result through
-    * [[provesUniverse]] and [[topKEids]] (memo validation, proof, and
-    * probe then share a single manifest round-trip). */
-  private[graft] def bucketStats(man: DataFrame, table: String,
+  /** Per-bucket [[BucketStat]]s for `attr`, folded from the manifest
+    * rows, and the format gate: an unstamped manifest, or ANY row for
+    * the attr carried by a non-current format, fails LOUD —
+    * aggregating only current-format rows while the data scan reads
+    * every file would silently drop top-k rows living in buckets the
+    * stale manifest rows describe. Empty result = attr not indexed (the
+    * caller's decline-to-fallback case). [[TripleStore]]'s asc-proof
+    * path folds ONCE (through [[Gen.bucketStats]]) and threads the
+    * result through [[provesUniverse]] and [[topKEids]]. */
+  private[graft] def bucketStats(man: Array[ManRow], table: String,
       attr: String): Array[BucketStat] = {
-    require(man.columns.contains("fmt"),
+    require(man.forall(_.fmt.isDefined),
       s"valueIndex $table predates format v$Fmt — rebuild it with " +
         "ValueIndex.build (old tables carry no version stamp)")
-    require(man.columns.contains("suml"),
-      s"valueIndex $table predates format v$Fmt — rebuild it with " +
-        s"ValueIndex.build (v$Fmt manifests carry per-bucket long sums)")
-    val agg = man.where(col("a") === attr)
-      .groupBy(col("bkt"))
-      .agg(min(when(col("fmt") === Fmt, col("minv"))).as("minv"),
-        max(when(col("fmt") === Fmt, col("maxv"))).as("maxv"),
-        sum(when(col("fmt") === Fmt, col("cnt"))).as("cnt"),
-        count(when(col("fmt") === Fmt, lit(1))).as("nman"),
-        sum(when(col("fmt") =!= Fmt, lit(1L)).otherwise(lit(0L)))
-          .as("stale"),
-        // decimal so a multi-row (appended) bucket's total can never
-        // overflow the aggregation itself; out-of-long-range totals
-        // become None below and the sum pushdown declines
-        sum(when(col("fmt") === Fmt, col("suml"))
-          .cast("decimal(38,0)")).as("suml"))
-      .collect()
-    require(agg.forall(_.getLong(5) == 0L),
+    val rows = man.filter(_.a == attr)
+    require(rows.forall(_.fmt.contains(Fmt)),
       s"valueIndex $table holds pre-v$Fmt rows for $attr — rebuild " +
         s"with ValueIndex.build (v$Fmt data rows carry vstr and the " +
         "shadow keying; older rows cannot be probed)")
-    agg.map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2),
-      r.getLong(3), r.getLong(4),
-      if (r.isNullAt(6)) None else toLongOpt(r.getDecimal(6))))
+    rows.groupBy(_.bkt).toArray.sortBy(_._1).map { case (b, rs) =>
+      // summed in decimal so a multi-row (appended) bucket's total can
+      // never overflow the fold itself; out-of-long-range totals become
+      // None and the sum pushdown declines
+      val suml =
+        if (rs.exists(_.suml.isEmpty)) None
+        else toLongOpt(rs.foldLeft(java.math.BigDecimal.ZERO)((acc, r) =>
+          acc.add(java.math.BigDecimal.valueOf(r.suml.get))))
+      (b, shadowMin(rs.map(_.minv)), shadowMax(rs.map(_.maxv)),
+        rs.map(_.cnt).sum, rs.length.toLong, suml)
+    }
   }
-
-  /** Formats [[compact]] may consume. Current-format ONLY: v5 data
-    * rows are byte-compatible with v6's, but v5 builds predate the
-    * declared-type fact filter, so migrating them in place could carry
-    * a type-drifted stray (shadow coalesced from the wrong value
-    * column) into a tree whose manifest counts the v6 aggregate
-    * pushdowns treat as native-predicate-equivalent. Foreign formats
-    * rebuild from the store instead, which re-applies the filter. */
-  private val DataCompatFmts = Set(Fmt)
 
   private val LongMinBD = new java.math.BigDecimal(Long.MinValue)
   private val LongMaxBD = new java.math.BigDecimal(Long.MaxValue)
   private def toLongOpt(bd: java.math.BigDecimal): Option[Long] =
     if (bd.compareTo(LongMinBD) >= 0 && bd.compareTo(LongMaxBD) <= 0)
       Some(bd.longValueExact()) else None
-
-  /** [[bucketStats]] results cached per (data path, attr), VALIDATED by
-    * the manifest directory's file listing: every mutation that can
-    * change an attr's bucket stats changes the listing — [[append]]
-    * appends NEW part files (parquet files are immutable and Spark
-    * mints fresh UUID names per write), [[build]]/[[compact]] write a
-    * fresh tree (compact under a NEW path, so even the cache key
-    * moves). A warm probe therefore pays ONE filesystem LIST (a single
-    * RPC on an object store, sub-ms locally) instead of a scheduled
-    * Spark job over the manifest — the dominant fixed cost of zone-map
-    * probes on small-to-mid corpora, and the steady-state serving cost
-    * at 100 TB. Unlike a blind per-path memo, the listing check also
-    * catches the OUT-OF-BAND append the asc-proof memo defends against
-    * (the hazard mutates the path in place — and in doing so adds
-    * files). Bounded: one entry per (index table generation, attr). */
-  private val statsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (String, Array[BucketStat])]
-
-  /** Test hook: the generations currently held by [[statsCache]] —
-    * pins compact's eviction of superseded paths. */
-  private[graft] def statsCacheKeys: Set[(String, String)] =
-    statsCache.keySet.toSet
-
-  /** name:length:mtime fingerprint of the manifest directory listing —
-    * the cache-validation token. Missing dir fingerprints to "" (the
-    * read below will fail loud on its own). */
-  private def manifestFingerprint(spark: SparkSession,
-      path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path + "_manifest")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) ""
-    else fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("\n")
-  }
-
-  /** [[bucketStats]] through [[statsCache]] when the generation is
-    * path-resolved; legacy per-name generations collect uncached. */
-  private[graft] def bucketStatsCached(spark: SparkSession, gen: Gen,
-      table: String, attr: String): Array[BucketStat] = gen.path match {
-    case None => bucketStats(gen.man(), table, attr)
-    case Some(p) =>
-      val fp = manifestFingerprint(spark, p)
-      statsCache.get((p, attr)) match {
-        case Some((f, stats)) if f == fp => stats
-        case _ =>
-          val stats = bucketStats(gen.man(), table, attr)
-          statsCache.put((p, attr), (fp, stats))
-          stats
-      }
-  }
 
   /** ONE bounded aggregate proving `ents` IS exactly `attr`'s fact
     * universe in the index, one row per entity — the sound form of the
@@ -777,11 +831,10 @@ object ValueIndex {
       attr: String, ents: DataFrame, gen: Option[Gen] = None,
       preStats: Option[Array[BucketStat]] = None): Boolean = {
     val g = gen.getOrElse(resolveGeneration(spark, table))
-    val (man, dat) = (g.man, g.dat)
-    val stats = preStats.getOrElse(bucketStatsCached(spark, g, table, attr))
+    val stats = preStats.getOrElse(g.bucketStats(attr))
     if (stats.isEmpty) return false
     val total = stats.map(_._4).sum
-    val idx = dat().where(col("a") === attr)
+    val idx = g.dat().where(col("a") === attr)
       .select(col("e"), lit(1).as("_m"))
     val r = ents.select(col("e")).join(idx, Seq("e"), "left_outer")
       .agg(count_distinct(col("e")).as("nEnts"),
@@ -792,6 +845,13 @@ object ValueIndex {
     nMatched == nEnts && nRows == nEnts && nRows == total
   }
 
+  /** Per-attr `frag` = manifest rows / distinct buckets, rounded exactly
+    * as Spark's `round(…, 2)` rounds a double (HALF_UP on its decimal
+    * form), the value [[stats]] reports and the valve compares. */
+  private def fragOf(rs: Array[ManRow]): Double =
+    BigDecimal(rs.length.toDouble / rs.map(_.bkt).distinct.length)
+      .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** Per-attr manifest-only HEALTH REPORT — the number the compaction
     * cadence reads: `frag` = manifest rows / distinct buckets (append
     * writes one manifest row and ≥ one file per touched bucket per
@@ -799,31 +859,19 @@ object ValueIndex {
     * tracks accrued appends; the measured probe tax of 4 worst-case
     * drifted appends is ~40-65%, see ScaleBench's eav_vidx_* rows).
     * Also surfaces the indexed fact count, bucket count, shadow value
-    * range, and the largest indexed txId per attr. O(manifest) like
-    * [[maxTx]]/[[factCounts]] — the index data is never scanned. */
+    * range, and the largest indexed txId per attr. A fold over the
+    * manifest snapshot like [[maxTx]]/[[factCounts]] — the index data
+    * is never scanned. */
   def stats(spark: SparkSession, table: String): DataFrame = {
-    val m = resolveGeneration(spark, table).man()
-    require(m.columns.contains("fmt") && m.columns.contains("maxtx"),
-      s"valueIndex $table predates format v$Fmt — rebuild it with " +
-        "ValueIndex.build")
-    // fail LOUD on stale-format rows like every other manifest reader —
-    // silently dropping them would report a healthy-looking index whose
-    // probes are about to refuse
-    require(m.where(col("fmt") =!= Fmt).isEmpty,
-      s"valueIndex $table holds pre-v$Fmt manifest rows — rebuild with " +
-        "ValueIndex.build")
-    m.groupBy(col("a").as("attr"))
-      .agg(sum(col("cnt")).as("n_facts"),
-        count_distinct(col("bkt")).as("n_buckets"),
-        count(lit(1)).as("n_manifest_rows"),
-        min(col("minv")).as("min_shadow"),
-        max(col("maxv")).as("max_shadow"),
-        max(col("maxtx")).as("max_tx"))
-      .select(lit(table).as("table"), col("attr"), col("n_facts"),
-        col("n_buckets"), col("n_manifest_rows"),
-        round(col("n_manifest_rows").cast("double") / col("n_buckets"), 2)
-          .as("frag"),
-        col("min_shadow"), col("max_shadow"), col("max_tx"))
+    val m = resolveGeneration(spark, table).manifest
+    requireCurrent(m, table)
+    import spark.implicits._
+    m.groupBy(_.a).toSeq.sortBy(_._1).map { case (a, rs) =>
+      (table, a, rs.map(_.cnt).sum, rs.map(_.bkt).distinct.length.toLong,
+        rs.length.toLong, fragOf(rs), shadowMin(rs.map(_.minv)),
+        shadowMax(rs.map(_.maxv)), rs.flatMap(_.maxtx).maxOption)
+    }.toDF("table", "attr", "n_facts", "n_buckets", "n_manifest_rows",
+      "frag", "min_shadow", "max_shadow", "max_tx")
   }
 
   /** AUTO-COMPACT VALVE — makes compaction cadence POLICY instead of
@@ -832,22 +880,24 @@ object ValueIndex {
     * row per touched bucket) and runs [[compact]] into `newPath` only
     * when any attr's frag exceeds `maxFrag`. A streaming maintenance
     * loop calls this once per microbatch with a batch-unique
-    * `newPath`; the check is O(manifest) — no data scanned — so the
-    * steady-state cost of the valve is one small aggregate, and the
-    * aggregate/membership probes (which decline on any un-reconciled
-    * append) regain pristine service exactly when the measured probe
-    * tax (~40-65% at frag ≈ 5, see ScaleBench's eav_vidx rows) says
-    * reconciliation pays for itself. Returns the superseded (data,
-    * manifest) paths when a compaction ran — the caller's vacuum
-    * hook — or None when the index was tight (newPath untouched, so
-    * callers may derive it from a monotone batch id without burning
-    * names). */
+    * `newPath`; the check is a driver-side fold over the manifest
+    * snapshot — no data scanned, and no Spark job at all when the
+    * snapshot is warm — and [[compact]]'s own format gate reuses the
+    * same snapshot. The aggregate/membership probes (which decline on
+    * any un-reconciled append) regain pristine service exactly when
+    * the measured probe tax (~40-65% at frag ≈ 5, see ScaleBench's
+    * eav_vidx rows) says reconciliation pays for itself. Returns the
+    * superseded (data, manifest) paths when a compaction ran — the
+    * caller's vacuum hook — or None when the index was tight (newPath
+    * untouched, so callers may derive it from a monotone batch id
+    * without burning names). */
   def compactIfFragmented(spark: SparkSession, table: String,
       newPath: String, maxFrag: Double = 2.0, nBuckets: Int = 64)
       : Option[(String, String)] = {
     require(maxFrag >= 1.0, s"maxFrag must be >= 1.0, got $maxFrag")
-    val row = stats(spark, table).agg(max(col("frag"))).head()
-    val frag = if (row.isNullAt(0)) 1.0 else row.getDouble(0)
+    val m = resolveGeneration(spark, table).manifest
+    requireCurrent(m, table)
+    val frag = m.groupBy(_.a).values.map(fragOf).maxOption.getOrElse(1.0)
     if (frag > maxFrag) Some(compact(spark, table, newPath, nBuckets))
     else None
   }
@@ -873,11 +923,11 @@ object ValueIndex {
     * probe declines asc — a value index fundamentally cannot enumerate
     * absent facts.
     *
-    * With `ents`, driver work is bounded: the aggregated manifest (≤
-    * buckets-per-attr rows) is collected once; each widening round is
-    * one partition-pruned count, and the target 4×s per round, so
-    * rounds ≤ log₄ of the attr's fact count even against a hostile
-    * `ents`. */
+    * With `ents`, driver work is bounded: the bucket stats (≤
+    * buckets-per-attr rows) fold once from the generation's manifest
+    * snapshot; each widening round is one partition-pruned count, and
+    * the target 4×s per round, so rounds ≤ log₄ of the attr's fact
+    * count even against a hostile `ents`. */
   private[graft] def topKEids(spark: SparkSession, table: String,
       attr: String, nativeCol: String, ents: Option[DataFrame],
       k: Int, desc: Boolean = true, gen: Option[Gen] = None,
@@ -885,17 +935,8 @@ object ValueIndex {
       : Option[DataFrame] = {
     if (!desc && ents.isDefined) return None
     val g = gen.getOrElse(resolveGeneration(spark, table))
-    val (man, dat) = (g.man, g.dat)
-    val buckets = preStats.getOrElse(bucketStatsCached(spark, g, table, attr))
+    val buckets = preStats.getOrElse(g.bucketStats(attr))
     if (buckets.isEmpty) return None // attr not indexed → fallback
-    // ALL driver-side shadow comparisons use java.lang.Double.compare —
-    // the total order with NaN LARGEST, which is exactly Spark SQL's
-    // ordering AND predicate semantics for NaN. Scala's IEEE operators
-    // would disagree (NaN >= t is false), silently pruning the bucket
-    // holding a double attr's NaN facts out of a desc scan while the
-    // fallback ranks them first. (String shadows are always finite —
-    // the NaN analysis is vacuous there.)
-    def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
     // walk order: best-bucket-first. Desc walks by min DESC and cuts on
     // the min (every row of a walked bucket is >= cut); asc mirrors —
     // by max ASC, cutting on the max (every row is <= cut).
@@ -924,7 +965,7 @@ object ValueIndex {
       val bkts =
         if (desc) buckets.filter(b => cmp(b._3, t) >= 0).map(_._1)
         else buckets.filter(b => cmp(b._2, t) <= 0).map(_._1)
-      dat().where(col("a") === attr && col("bkt").isInCollection(bkts) &&
+      g.dat().where(col("a") === attr && col("bkt").isInCollection(bkts) &&
         (if (desc) col("vnum") >= t else col("vnum") <= t))
     }
     def ordered(df: DataFrame): DataFrame =
@@ -973,7 +1014,6 @@ object ValueIndex {
     * shadow window). */
   private def keepForRange(buckets: Array[BucketStat],
       sLo: Option[Double], sHi: Option[Double]): Array[BucketStat] = {
-    def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
     buckets.filter(b =>
       sLo.forall(lo => cmp(b._3, lo) >= 0) &&
         sHi.forall(hi => cmp(b._2, hi) <= 0))
@@ -1034,7 +1074,6 @@ object ValueIndex {
     if (shadows.exists(_.isEmpty)) return None
     val sh = shadows.flatten
     pristineStats(spark, table, attr).map { case (g, buckets) =>
-      def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
       val keep = buckets.filter(b =>
         sh.exists(s => cmp(b._2, s) <= 0 && cmp(b._3, s) >= 0))
       val df =
@@ -1070,9 +1109,9 @@ object ValueIndex {
             rangePred(keep, nativeCol, r, sLo, sHi))
           .select(col("e"))
         (df, keep.map(_._4).sum,
-          // rangeProbe returns only the kept buckets; re-read the full
-          // stats from the (warm) cache for the attr total
-          bucketStatsCached(spark, g, table, attr).map(_._4).sum)
+          // rangeProbe returns only the kept buckets; the generation's
+          // snapshot still holds the full stats for the attr total
+          g.bucketStats(attr).map(_._4).sum)
       }
     case _ => None
   }
@@ -1083,7 +1122,7 @@ object ValueIndex {
   private def pristineStats(spark: SparkSession, table: String,
       attr: String): Option[(Gen, Array[BucketStat])] = {
     val g = resolveGeneration(spark, table)
-    val buckets = bucketStatsCached(spark, g, table, attr)
+    val buckets = g.bucketStats(attr)
     if (buckets.isEmpty) None // attr not indexed → fallback
     else if (buckets.exists(_._5 > 1L)) None // appended → not pristine
     else Some((g, buckets))
@@ -1155,7 +1194,6 @@ object ValueIndex {
       r: graft.query.MRange, k: Int, desc: Boolean): Option[DataFrame] =
     rangeProbe(spark, table, attr, vtype, r).flatMap {
       case (g, keep, sLo, sHi) =>
-        def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
         val inRange = rangePred(keep, nativeCol, r, sLo, sHi)
         val walk =
           if (desc) keep.sortWith((x, y) => cmp(x._2, y._2) > 0)
@@ -1221,7 +1259,6 @@ object ValueIndex {
     * is scanned exactly, never counted blind. */
   private def splitInnerEdge(keep: Array[BucketStat], sLo: Option[Double],
       sHi: Option[Double]): (Array[BucketStat], Array[BucketStat]) = {
-    def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
     keep.partition(b =>
       sLo.forall(lo => cmp(b._2, lo) > 0) &&
         sHi.forall(hi => cmp(b._3, hi) < 0))
@@ -1280,7 +1317,6 @@ object ValueIndex {
     pristineStats(spark, table, attr).flatMap { case (g, buckets) =>
       val total = buckets.map(_._4).sum
       if (total == 0L) return None
-      def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
       val walk = buckets.sortWith((x, y) => cmp(x._2, y._2) < 0)
       val cumBefore = walk.scanLeft(0L)(_ + _._4)
       def locate(k: Long): (Int, Long) = {
@@ -1368,7 +1404,6 @@ object ValueIndex {
     rangeProbe(spark, table, attr, vtype, r).map { case (g, keep, sLo, sHi) =>
       if (keep.isEmpty) None
       else {
-        def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
         val (inner, _) = splitInnerEdge(keep, sLo, sHi)
         val innerSet = inner.map(_._1).toSet
         val walk =
@@ -1405,7 +1440,6 @@ object ValueIndex {
     rangeProbe(spark, table, attr, vtype, r).map { case (g, keep, sLo, sHi) =>
       if (keep.isEmpty) Map.empty[Double, Any]
       else {
-        def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
         val (inner, edge) = splitInnerEdge(keep, sLo, sHi)
         val innerSet = inner.map(_._1).toSet
         val edgeCounts: Map[Int, Long] =

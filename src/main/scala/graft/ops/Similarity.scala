@@ -322,8 +322,11 @@ object Similarity {
         cell -> (0 until dim).map { i =>
           val n = r.getLong(2 + 2 * i)
           // a dim no member reaches keeps the previous centroid's value
-          // (the old per-(cell, dim) mean simply had no row for it)
-          if (n == 0L) prev(cell)(i) else r.getDouble(1 + 2 * i) / n
+          // (the old per-(cell, dim) mean simply had no row for it) — or
+          // 0.0 when that centroid is a sampled vector shorter than dim
+          // (a ragged corpus), the padding every updated centroid gets
+          if (n == 0L) prev(cell).lift(i).getOrElse(0.0)
+          else r.getDouble(1 + 2 * i) / n
         }
       }.toMap
       // a cell that lost every member keeps its previous centroid

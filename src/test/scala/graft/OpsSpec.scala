@@ -335,6 +335,23 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("ivfTopK: a sampled centroid SHORTER than the first-sampled one " +
+      "survives Lloyd's update when no member covers its missing dims") {
+    // a 3-dim and a 2-dim vector, both sampled as centroids: whichever
+    // samples first fixes dim, so one of the two id assignments leaves
+    // the short vector's cell with members that never reach dim 3
+    for ((longId, shortId) <- Seq((1L, 2L), (2L, 1L))) {
+      val df = Seq((longId, Array(1.0f, 0.0f, 0.0f)),
+        (shortId, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+      val exact = Similarity.bruteTopK(df, df, "vec_id", "embedding", 1)
+        .as[(Long, Long, Int)].collect().toSet
+      val ivf = Similarity.ivfTopK(df, df, "vec_id", "embedding", 1,
+        nCells = 2, nProbe = 2, iters = 2)
+        .as[(Long, Long, Int)].collect().toSet
+      assert(ivf === exact)
+    }
+  }
+
   test("recallAtK: partial and zero-hit queries score fractionally, not drop") {
     val exact = Seq((1L, 10L, 1), (1L, 11L, 2), (1L, 12L, 3),
       (2L, 20L, 1), (2L, 21L, 2))

@@ -1539,25 +1539,18 @@ class TripleStoreSpec extends AnyFunSuite {
     val rows = (0 until 120).map(i => (f"e$i%03d", i.toLong))
     val plain = numStore(rows)
     plain.buildValueIndex("vidx_mig", s"$dir/v", Seq("n:v"), nBuckets = 6)
-    // forge the v5 shape: same data tree, manifest without suml and
-    // stamped fmt=5 (what a pre-upgrade index on disk looks like)
-    val manPath = s"$dir/v_manifest"
-    val legacy = spark.read.parquet(manPath).drop("suml")
-      .withColumn("fmt", lit(5))
-    val rowsL = legacy.collect().toSeq
-    val schemaL = legacy.schema
-    def purge(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(purge)
-      f.delete(): Unit
-    }
-    purge(new java.io.File(manPath))
-    spark.createDataFrame(java.util.Arrays.asList(rowsL: _*), schemaL)
-      .write.parquet(manPath)
+    // forge the v5 shape: same data tree, manifest WITHOUT the suml
+    // column and stamped fmt=5 (what a pre-upgrade index on disk looks
+    // like). Index reads pin the v6 schema, so the missing column reads
+    // as null and the fmt stamp is what every reader must refuse.
+    forgeManifest(s"$dir/v_manifest")(
+      _.drop("suml").withColumn("fmt", lit(5)))
     val e = intercept[IllegalArgumentException] {
       ValueIndex.countRange(spark, "vidx_mig", "n:v", "vlong",
         Triples.VLong, MRange(lo = Some(10L)))
     }
     assert(e.getMessage.contains("rebuild"))
+    assertEveryManifestReaderRefuses("vidx_mig", s"$dir/vx")
     // compact refuses foreign formats: v5 builds predate the
     // declared-type fact filter, so an in-place migration could carry
     // a type-drifted stray into manifest counts the v6 aggregate
@@ -1657,15 +1650,18 @@ class TripleStoreSpec extends AnyFunSuite {
     // an UPSERTING append (e199: 199 → 5000 at a later txId): the stale
     // row sits beside the new one until compaction reconciles
     ValueIndex.append(numStore(Seq(("e199", 5000L)), tx = 1L), "vidx_t5")
+    assert(ValueIndex.snapshotCacheKeys.contains(s"$dir/v5"),
+      "the probes and appends above must have cached the generation")
     // compact: re-cut over current rows, keep latest txId per (a, e),
     // swap catalog, old paths return
     val (oldData, oldMan) = ValueIndex.compact(spark, "vidx_t5",
       s"$dir/v5c", nBuckets = 8)
-    // the swap supersedes the old generation: its cached bucket stats
-    // are unreachable (probes resolve the new location) and must be
-    // evicted, not leaked one Array per attr per compaction
-    assert(!ValueIndex.statsCacheKeys.exists(_._1 == oldData),
-      "compact must evict the superseded generation's statsCache keys")
+    // the swap supersedes the old generation: its cached manifest
+    // snapshot is unreachable (probes resolve the new location) and
+    // must be evicted, not leaked one manifest per compaction
+    assert(oldData === s"$dir/v5")
+    assert(!ValueIndex.snapshotCacheKeys.contains(oldData),
+      "compact must evict the superseded generation's snapshot")
     assert(manifestRows() <= 8, "compaction must collapse the manifest")
     assert(maxBkt() <= 7, "compaction must restore the bucket-id range")
     // the store matching the index now includes the upsert (snapshot
@@ -2064,6 +2060,61 @@ class TripleStoreSpec extends AnyFunSuite {
         Some(Seq("e1").toDF("e")), 1)
     }
     assert(err2.getMessage.contains("rebuild"))
+    // a VIEW-registered layout whose manifest has no fmt column: the
+    // pinned-schema read renders the column as null, and the null-safe
+    // fmt gates must refuse it exactly as the column check did
+    numStore(Seq(("e1", 1L), ("e2", 2L)))
+      .buildValueIndex("vidx_nofmt", s"$dir/nofmt", Seq("n:v"), nBuckets = 2)
+    forgeManifest(s"$dir/nofmt_manifest")(_.drop("fmt"))
+    val err3 = intercept[IllegalArgumentException] {
+      ValueIndex.topKEids(spark, "vidx_nofmt", "n:v", "vlong",
+        Some(Seq("e1").toDF("e")), 1)
+    }
+    assert(err3.getMessage.contains("rebuild"))
+    assertEveryManifestReaderRefuses("vidx_nofmt", s"$dir/nofmt2")
+    // txId bookkeeping needs only a v4+ stamp, which an unstamped row
+    // lacks
+    val err4 = intercept[IllegalArgumentException] {
+      ValueIndex.maxTx(spark, "vidx_nofmt")
+    }
+    assert(err4.getMessage.contains("rebuild"))
+  }
+
+  /** Rewrite the manifest at `manPath` through `f` — forges a legacy
+    * manifest shape under an otherwise intact layout. */
+  private def forgeManifest(manPath: String)(
+      f: DataFrame => DataFrame): Unit = {
+    val forged = f(spark.read.parquet(manPath))
+    val rows = forged.collect().toSeq
+    val schema = forged.schema
+    def purge(x: java.io.File): Unit = {
+      if (x.isDirectory) x.listFiles.foreach(purge)
+      x.delete(): Unit
+    }
+    purge(new java.io.File(manPath))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .write.parquet(manPath)
+  }
+
+  /** Every current-format manifest reader — probes, health report,
+    * receipt, append, the valve and compact — must refuse the
+    * legacy manifest behind `table` with the rebuild message. */
+  private def assertEveryManifestReaderRefuses(table: String,
+      spare: String): Unit = {
+    val readers: Seq[(String, () => Any)] = Seq(
+      "rangeEids" -> (() => ValueIndex.rangeEids(spark, table, "n:v",
+        "vlong", Triples.VLong, MRange(lo = Some(0L)))),
+      "stats" -> (() => ValueIndex.stats(spark, table)),
+      "factCounts" -> (() => ValueIndex.factCounts(spark, table)),
+      "append" -> (() => ValueIndex.append(
+        numStore(Seq(("z1", 7L))), table)),
+      "compactIfFragmented" -> (() => ValueIndex.compactIfFragmented(
+        spark, table, spare, maxFrag = 1.0)),
+      "compact" -> (() => ValueIndex.compact(spark, table, spare)))
+    for ((name, read) <- readers) {
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains("rebuild"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("valueIndex: STRING attrs probe through the byte-prefix shadow — " +
@@ -2382,16 +2433,116 @@ class TripleStoreSpec extends AnyFunSuite {
     val rows = (0 until 100).map(i => (f"e$i%03d", i.toLong))
     numStore(rows).buildValueIndex("vidx_rc", s"$dir/v", Seq("n:v"),
       nBuckets = 4)
-    val rc = ValueIndex.factCounts(spark, "vidx_rc")
-    val scans = rc.queryExecution.sparkPlan.collectLeaves().collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.relation.location.rootPaths.map(_.toString)
-    }.flatten
-    assert(scans.nonEmpty && scans.forall(_.endsWith("_manifest")),
-      s"receipt must scan only the manifest, saw: $scans")
-    val out = rc.collect().map(r =>
-      (r.getString(1), r.getLong(2))).toMap
+    // the receipt is a fold over the manifest snapshot: with the data
+    // tree moved away it still answers, and the frame it returns scans
+    // no file at all
+    val data = new java.io.File(s"$dir/v")
+    val moved = new java.io.File(s"$dir/v_moved")
+    assert(data.renameTo(moved))
+    val out = try {
+      val rc = ValueIndex.factCounts(spark, "vidx_rc")
+      val scans = rc.queryExecution.sparkPlan.collectLeaves().collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.map(_.toString)
+      }.flatten
+      assert(scans.isEmpty, s"receipt must scan no file, saw: $scans")
+      rc.collect().map(r => (r.getString(1), r.getLong(2))).toMap
+    } finally assert(moved.renameTo(data))
     assert(out === Map("n:v" -> 100L))
+  }
+
+  test("valueIndex: manifest questions fold one cached snapshot and " +
+      "index reads pin their schema — no schema-inference job, no job " +
+      "for a warm valve check, and a bounded job count per round") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vidxjobs").toString
+    val base = (0 until 400).map(i => (f"e$i%03d", i.toLong))
+    val batch = (0 until 40).map(i => (f"b$i%03d", i * 10L))
+    numStore(base).buildValueIndex("vidx_jobs", s"$dir/g0", Seq("n:v"),
+      nBuckets = 4)
+    val sc = spark.sparkContext
+    // jobs are attributed to this thread (and threads it spawns) by a
+    // local property, so a stray job from elsewhere in the JVM is ignored
+    val tag = "graft.test.vidxjobs"
+    final case class Job(callSite: String, inSql: Boolean, desc: String)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Job]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = j.properties
+        // the call site ("parquet at ValueIndex.scala:…") rides on a
+        // property when the caller set one, else on the final stage
+        if (p != null && p.getProperty(tag) != null)
+          seen.add(Job(Option(p.getProperty("callSite.short")).getOrElse(
+              j.stageInfos.maxBy(_.stageId).name),
+            p.getProperty("spark.sql.execution.id") != null,
+            String.valueOf(p.getProperty("spark.job.description"))))
+      }
+    }
+    var fences = 0
+    // the jobs `body` submits: the listener bus is async but FIFO, so
+    // once a FENCE job run after `body` is visible, every job `body`
+    // ran has been seen
+    def jobsOf(body: => Unit): Seq[Job] = {
+      seen.clear()
+      body
+      fences += 1
+      val fence = s"fence-$fences"
+      sc.setJobDescription(fence)
+      try sc.parallelize(1 to 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis + 10000
+      def all = seen.toArray(Array.empty[Job]).toSeq
+      while (!all.exists(_.desc == fence) &&
+          System.currentTimeMillis < deadline) Thread.sleep(20)
+      assert(all.exists(_.desc == fence), "fence job never seen")
+      all.takeWhile(_.desc != fence)
+    }
+    val values = (base ++ batch).map(_._2).sorted
+    def probes(): Unit = {
+      assert(ValueIndex.countRange(spark, "vidx_jobs", "n:v", "vlong",
+        Triples.VLong, MRange(lo = Some(100L))) ===
+        Some(values.count(_ >= 100L).toLong))
+      assert(ValueIndex.rangeEids(spark, "vidx_jobs", "n:v", "vlong",
+        Triples.VLong, MRange(Some(0L), Some(5L))).get.count() === 7L)
+      assert(ValueIndex.percentileValue(spark, "vidx_jobs", "n:v", "vlong",
+        0.5) === Some(values(values.size / 2 - 1)))
+    }
+    sc.setLocalProperty(tag, "1")
+    sc.addSparkListener(listener)
+    try {
+      // one ingest round: append (4 touched buckets → frag 2.0), the
+      // valve compacts, then the probes read the new generation
+      val round = jobsOf {
+        ValueIndex.append(numStore(batch), "vidx_jobs")
+        assert(ValueIndex.compactIfFragmented(spark, "vidx_jobs",
+          s"$dir/g1", maxFrag = 1.5, nBuckets = 4).isDefined)
+        probes()
+      }
+      // a parquet schema inference runs outside any SQL execution from
+      // the `spark.read...parquet` call site; writes run inside one
+      val inference = round.filter(j =>
+        j.callSite.startsWith("parquet at") && !j.inSql)
+      assert(inference.isEmpty, s"schema-inference jobs: $inference")
+      // the snapshot is warm after the probes: the valve's check is a
+      // driver-side fold (and the tight index stays put)
+      val valve = jobsOf {
+        assert(ValueIndex.compactIfFragmented(spark, "vidx_jobs",
+          s"$dir/g2", maxFrag = 1.5, nBuckets = 4).isEmpty)
+      }
+      assert(valve.isEmpty, s"warm valve check ran jobs: $valve")
+      // 27 jobs on Spark 4 at local[4] with 4 shuffle partitions; the
+      // slack absorbs an adaptive-execution stage job or two, not a
+      // manifest aggregate per attr or an inferred index read
+      val RoundJobBound = 32
+      assert(round.size <= RoundJobBound,
+        s"${round.size} jobs in one round:\n${round.mkString("\n")}")
+      // a warm probe pass costs only data jobs: the snapshot answers
+      // every manifest question
+      val warm = jobsOf(probes())
+      assert(!warm.exists(_.callSite.startsWith("parquet at")), s"$warm")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setLocalProperty(tag, null)
+    }
   }
 
   test("valueIndex: the asc universe proof memoizes per store " +
