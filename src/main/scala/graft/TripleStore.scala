@@ -1,5 +1,6 @@
 package graft
 
+import graft.graph.Fixpoint
 import graft.model.{AttrSchema, Triples}
 import graft.query._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -786,18 +787,24 @@ class TripleStore(
       entitiesDistinct: Boolean, entLiterals: Option[Seq[String]]): DataFrame = {
     // an entity frame that IS a materialized leaf — a LocalRelation
     // (explicit eid list) or a LogicalRDD (a checkpoint this method
-    // created one recursion step up), possibly under a bare projection
-    // — must not be checkpointed: inlining a leaf into the branches is
-    // free, and a pin would be a pure-waste job + storage. The check is
+    // created one recursion step up), possibly under bare projections
+    // (attributes or aliases of attributes; a projection that computes
+    // anything would re-run per branch) — must not be checkpointed:
+    // inlining a leaf into the branches is free, and a pin would be a
+    // pure-waste job + storage. The check is
     // deliberately NOT "all leaves materialized": a distinct/union/
     // filter ABOVE materialized leaves (a pull over reachable()'s
     // returned union, say) re-inlines that operator — an exchange of
     // the whole frame — into every fan-out branch, the exact
     // replication the pin exists to avoid, so those still pin.
     def materializedOnly(df: DataFrame): Boolean = {
+      import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
       import org.apache.spark.sql.catalyst.plans.logical._
       def strip(p: LogicalPlan): LogicalPlan = p match {
-        case pr: Project => strip(pr.child)
+        case pr: Project if pr.projectList.forall {
+              case _: Attribute | Alias(_: Attribute, _) => true
+              case _ => false
+            } => strip(pr.child)
         case al: SubqueryAlias => strip(al.child)
         case other => other
       }
@@ -819,8 +826,17 @@ class TripleStore(
       val entsCk =
         if (materializedOnly(entities)) ents0
         else ents0.localCheckpoint(eager = true)
+      // a PRec's depth is the number of non-empty levels of the BFS keyed
+      // by (entity, root) — each root keeps its own visited set, as the
+      // PRec scaladoc requires — capped at maxDepth so cycles terminate
       val expanded = specs.map {
-        case p: PRec => expandRec(specs, p, recDepth(entsCk, p))
+        case p: PRec =>
+          val es = edgesFor(Some(Seq(p.attr)))
+          val (src, dst) = if (p.reverse) ("vref", "e") else ("e", "vref")
+          val depth = Fixpoint.frontier(entsCk.select($"e", $"e".as("root")),
+            Seq("e", "root"), es.select(col(src).as("_src"), col(dst).as("_dst")),
+            p.maxDepth).frames.size - 1
+          expandRec(specs, p, depth)
         case s => s
       }
       return pullImpl(entsCk, expanded, entitiesDistinct = true, entLiterals)
@@ -1434,9 +1450,10 @@ class TripleStore(
     * this costs O(Σ|delta|). New facts = derived ∖ total (left-anti);
     * iteration stops when every delta is empty, and a non-empty delta at
     * `maxIters` THROWS — a silently truncated closure would look like a
-    * valid answer. Each delta/total is localCheckpoint'd to truncate
-    * lineage. `where` clauses may use IDB predicates alongside stored
-    * attrs.
+    * valid answer. Each delta is pinned, and each predicate's running
+    * total is a [[graft.graph.Fixpoint.Running]] set (see
+    * [[graft.graph.Fixpoint]] for its re-pin rule). `where` clauses may
+    * use IDB predicates alongside stored attrs.
     *
     * The grammar's `take`/`sort` keys (tripl.py:583) lower exactly like
     * pullMany's: `sortBy` is one of the `find` variables, and sort+take
@@ -1615,24 +1632,23 @@ class TripleStore(
       // bodies over the EDB and lower strata can produce facts; these are
       // the depth-1 base of this stratum's closure
       val seedIdb = totalAll ++ predsS.map(_ -> empty).toMap
-      var total: Map[String, DataFrame] = predsS.map { p =>
+      var delta: Map[String, DataFrame] = predsS.map { p =>
         p -> rulesS.filter(_.head._2 == p)
           .map(r => ruleDf(r, _ => seedIdb, totalAll))
           .reduce(_ unionByName _).distinct().localCheckpoint(eager = true)
       }.toMap
-      var delta: Map[String, DataFrame] = total
-      // unions-since-last-pin PER PREDICATE: keying the re-pin to the
-      // global round counter lets a predicate whose delta is empty on
-      // every multiple-of-8 round grow its lazy union unboundedly on
-      // deep recursions — count each predicate's own accumulated unions
-      var sincePin: Map[String, Int] = predsS.map(_ -> 0).toMap
+      // one running total PER PREDICATE (see [[Fixpoint.Running]] for
+      // the re-pin rule): a predicate whose delta is empty adds nothing,
+      // so its union count only grows with its own non-empty rounds
+      var total: Map[String, Fixpoint.Running] =
+        delta.map { case (p, df) => p -> Fixpoint.Running(df) }
       var deltaSizes: Map[String, Long] =
         delta.map { case (p, df) => p -> df.count() }
       onIteration(iterNo, deltaSizes)
       iterNo += 1
       var i = 1
       while (deltaSizes.valuesIterator.exists(_ > 0) && i < maxIters) {
-        val idbTot = totalAll ++ total
+        val idbTot = totalAll ++ total.map { case (p, r) => p -> r.df }
         val next: Map[String, DataFrame] = predsS.map { p =>
           val perLiteral = rulesS.filter(_.head._2 == p).flatMap { r =>
             // one derivation per same-stratum IDB literal, delta-bound at
@@ -1646,30 +1662,15 @@ class TripleStore(
           val fresh =
             if (perLiteral.isEmpty) empty
             else perLiteral.reduce(_ unionByName _).distinct()
-              .join(total(p), Seq("s", "o"), "left_anti")
+              .join(total(p).df, Seq("s", "o"), "left_anti")
               .localCheckpoint(eager = true)
           p -> fresh
         }.toMap
         delta = next
         deltaSizes = delta.map { case (p, df) => p -> df.count() }
-        total = predsS.map { p =>
-          p -> (if (deltaSizes(p) == 0) total(p)
-                else {
-                  // the running total unions the (already-checkpointed)
-                  // per-round deltas LAZILY — no third driver action per
-                  // round; re-pin after every 8 unions OF THIS PREDICATE
-                  // so a deep recursion's union fan-in (and the rule
-                  // joins' plan width) stays bounded
-                  val u = total(p).unionByName(delta(p))
-                  if (sincePin(p) + 1 >= 8) {
-                    sincePin = sincePin.updated(p, 0)
-                    u.localCheckpoint(eager = true)
-                  } else {
-                    sincePin = sincePin.updated(p, sincePin(p) + 1)
-                    u
-                  }
-                })
-        }.toMap
+        total = total.map { case (p, r) =>
+          p -> (if (deltaSizes(p) == 0) r else r + delta(p))
+        }
         onIteration(iterNo, deltaSizes)
         iterNo += 1
         i += 1
@@ -1677,7 +1678,7 @@ class TripleStore(
       if (deltaSizes.valuesIterator.exists(_ > 0)) throw new IllegalStateException(
         s"datalogRules did not reach a fixpoint in $maxIters iterations — " +
           "raise maxIters (deep recursion) or check the rules for divergence")
-      totalAll ++= total
+      totalAll ++= total.map { case (p, r) => p -> r.df }
     }
     // or-groups: one relation per group — union of per-branch conjunctive
     // joins projected onto the (identical, enforced) branch variable set.
@@ -1750,65 +1751,18 @@ class TripleStore(
       },
       p.reverse, Some(p.name))
 
-  /** Probe the actual recursion depth of `roots` through `p.attr`: BFS
-    * keyed by (entity, root) so each root's traversal has its OWN visited
-    * set — matching the reference's per-root `_seen_entities` cycle guard
-    * (tripl.py pull): chains from different roots converging on a shared
-    * entity at different depths (a DAG) still count each root's full
-    * chain. Returns the max level at which ANY root's frontier is
-    * non-empty, capped at p.maxDepth so cycles terminate. A handful of
-    * tiny scalar jobs at plan time — the same pattern as any iterative
-    * fixpoint on Spark. Same (entity × root) frontier-cost caveat as
-    * [[reachable]]: dense graphs with many roots carry O(|V|·|roots|)
-    * state (p.maxDepth is the backstop here). */
-  private def recDepth(roots: DataFrame, p: PRec): Int = {
-    val es0 = edgesFor(Some(Seq(p.attr)))
-    // materialize the edge projection once for the whole probe loop —
-    // the same no-re-evaluation-per-level rule as bfsFrom
-    val es = (
-      if (p.reverse) es0.select($"vref".as("_src"), $"e".as("_dst"))
-      else es0.select($"e".as("_src"), $"vref".as("_dst"))
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // `visited` is a LAZY union of per-level CHECKPOINTED leaves: each
-      // level's anti-join unions ≤ maxDepth materialized blocks — no
-      // recompute, and no third per-level job re-checkpointing the
-      // running union (2 tiny jobs per level, down from 3)
-      var visited = roots.select($"e", $"e".as("root")).localCheckpoint(eager = true)
-      var frontier = visited
-      var d = 0
-      var sincePin = 0
-      while (d < p.maxDepth) {
-        val next = frontier.join(es, frontier("e") === es("_src"))
-          .select($"_dst".as("e"), $"root").distinct()
-          .join(visited, Seq("e", "root"), "left_anti")
-          .localCheckpoint(eager = true)
-        if (next.isEmpty) return d
-        visited = visited.unionByName(next)
-        // re-pin the running union every 8 levels (the datalog loop's
-        // cadence): the anti-join otherwise plans against a union of d
-        // leaves at depth d — O(d²) plan nodes over a deep traversal
-        sincePin += 1
-        if (sincePin >= 8) {
-          visited = visited.localCheckpoint(eager = true); sincePin = 0
-        }
-        frontier = next
-        d += 1
-      }
-      d
-    } finally es.unpersist(blocking = false)
-  }
-
   // ---------------------------------------------------------------------
   // Recursion (Q7e '...'): reachability fixpoint
   // ---------------------------------------------------------------------
 
   /** Entities transitively reachable from `roots` through ref edges
-    * (optionally restricted to `attrs`). Iterative BFS fixpoint with
-    * localCheckpoint per iteration to truncate lineage — the set-at-a-time
-    * analogue of pull's '...' recursion with its `_seen_entities` cycle
-    * guard (tripl.py:652-669). `maxIters` bounds runaway graphs.
-    * Output: (e, root, depth) — e reachable from root in `depth` hops.
+    * (optionally restricted to `attrs`): one [[graft.graph.Fixpoint]]
+    * frontier loop keyed by (entity, root) — the set-at-a-time analogue
+    * of pull's '...' recursion with its `_seen_entities` cycle guard
+    * (tripl.py:652-669); its doc gives the pins and jobs per level.
+    * `maxIters` bounds runaway graphs: the answer silently stops at
+    * depth `maxIters`. Output: (e, root, depth) — e reachable from root
+    * in `depth` hops.
     *
     * SCALE NOTE: the visited/frontier sets are keyed by (entity, root) —
     * required by the reference's per-root traversal semantics (each
@@ -1830,7 +1784,8 @@ class TripleStore(
   /** [[reachable]] lowered to `WITH RECURSIVE` (one UnionLoop execution —
     * the graph sibling of datalogRules' `useRecursiveCte`): the whole
     * traversal runs inside a single query, no per-depth driver loop
-    * (count + localCheckpoint per level in [[bfsFrom]]). The recursion is
+    * (a pin + an emptiness check per level in [[graft.graph.Fixpoint]]).
+    * The recursion is
     * DEPTH-BOUNDED in the recursive term (`depth < maxDepth`), so it
     * terminates on ANY graph — cycles included — and the final
     * min-depth aggregation reproduces exactly [[reachable]]'s
@@ -1849,11 +1804,11 @@ class TripleStore(
     roots.select($"e").distinct()
       .createOrReplaceTempView(s"${tag}_roots")
     // checkpoint the edge projection (lazily — computed at the query's
-    // first materialization, same idiom as shortestPaths/pageRank): the
+    // first materialization, same idiom as pageRankStatic): the
     // UnionLoop re-executes the recursive term's subtree once per
     // level, so an un-pinned view re-derives the triple-flatten + attr
     // filter (or a caller's fabricated-edge shuffle) at every depth —
-    // the exact per-level re-evaluation bfsFrom's persist removes
+    // the exact per-level re-evaluation the frontier loop's persist removes
     edgesFor(attrs).select($"e".as("_src"), $"vref".as("_dst"))
       .localCheckpoint(eager = false)
       .createOrReplaceTempView(s"${tag}_edges")
@@ -1881,7 +1836,8 @@ class TripleStore(
     * into scheduler pool "graft_reachable" — under a FAIR-configured
     * cluster the batches share executors fairly; under FIFO their jobs
     * still interleave): each batch's BFS is a chain of small blocking
-    * jobs (per-level join + checkpoint), so running them one at a time
+    * jobs (the per-level pin and check of [[graft.graph.Fixpoint]]),
+    * each batch with its own loop state, so running them one at a time
     * serializes the cluster into idle-gapped sequential jobs — at 1.5 M
     * roots that is ~1000 batches of dead time, while k concurrent
     * batches keep the executors saturated at k× one batch's bounded
@@ -1984,79 +1940,19 @@ class TripleStore(
     }
   }
 
-  /** The BFS fixpoint shared by [[reachable]] / [[reachableBatched]]:
-    * frontier expansion over a prepared (_src, _dst) edge frame. */
+  /** The per-root BFS shared by [[reachable]] / [[reachableBatched]]:
+    * one [[graft.graph.Fixpoint.frontier]] keyed by (e, root) over a
+    * prepared (_src, _dst) edge frame, each level tagged with its depth. */
   private def bfsFrom(
       roots: DataFrame,
-      es0: DataFrame,
+      es: DataFrame,
       maxIters: Int,
-      maxFrontier: Option[Long]): DataFrame = {
-    // materialize the edge projection ONCE: the per-level join would
-    // otherwise re-evaluate the lazy edge plan (triple flatten +
-    // attr filter — or a caller's fabricated-lineage shuffle) at EVERY
-    // depth. A caller that persisted already (reachableBatched shares
-    // one edge cache across root batches) keeps ownership — only a
-    // cache WE created is dropped on exit.
-    val ownCache =
-      es0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val es =
-      if (ownCache)
-        es0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else es0
-    try {
-    // `levels` holds one CHECKPOINTED frame per depth: the anti-join and
-    // the returned closure union those materialized leaves lazily — no
-    // recompute, and no third per-level job re-checkpointing the running
-    // union (2 tiny jobs per level, down from 3; at reachableBatched's
-    // ~1000-batch scale that is a scheduling-dead-time lever, not a nicety)
-    val root0 = roots.select($"e", $"e".as("root"), lit(0).as("depth"))
-      .localCheckpoint(eager = true)
-    var levels = List(root0)
-    var visitedKeys = root0.select($"e", $"root")
-    var frontier = root0
-    var i = 0
-    var sincePin = 0
-    var done = false
-    while (i < maxIters && !done) {
-      val next = frontier.join(es, frontier("e") === es("_src"))
-        .select($"_dst".as("e"), $"root", ($"depth" + 1).as("depth"))
-        .join(visitedKeys, Seq("e", "root"), "left_anti")
-        .groupBy($"e", $"root").agg(min($"depth").as("depth"))
-        .localCheckpoint(eager = true)
-      val frontierSize = maxFrontier match {
-        case Some(cap) =>
-          val n = next.count()
-          if (n > cap) throw new IllegalStateException(
-            s"reachable: frontier of $n (entity, root) pairs at depth ${i + 1} " +
-              s"exceeds maxFrontier=$cap — the graph is too dense for " +
-              "per-root traversal at this root-set size; batch the roots " +
-              "or raise the cap")
-          n
-        case None => if (next.isEmpty) 0L else 1L
-      }
-      if (frontierSize == 0L) done = true
-      else {
-        levels ::= next
-        visitedKeys = visitedKeys.unionByName(next.select($"e", $"root"))
-        // re-pin the running visited union every 8 levels (the datalog
-        // loop's cadence): the anti-join otherwise plans against a
-        // union of d leaves at depth d — O(d²) plan nodes over a deep
-        // traversal. The returned closure still unions the per-level
-        // leaves directly (consumed once; fan-in is linear).
-        sincePin += 1
-        if (sincePin >= 8) {
-          visitedKeys = visitedKeys.localCheckpoint(eager = true)
-          sincePin = 0
-        }
-        frontier = next
-      }
-      i += 1
-    }
-    levels.reduce(_ unionByName _)
-    // every level is checkpoint-backed, so dropping the edge cache cannot
-    // invalidate the returned result
-    } finally { if (ownCache) es.unpersist(blocking = false) }
-  }
+      maxFrontier: Option[Long]): DataFrame =
+    Fixpoint.frontier(roots.select($"e", $"e".as("root")), Seq("e", "root"),
+        es, maxIters, maxFrontier)
+      .frames.zipWithIndex
+      .map { case (f, d) => f.select($"e", $"root", lit(d).as("depth")) }
+      .reduce(_ unionByName _)
 }
 
 object TripleStore {

@@ -66,54 +66,25 @@ object RefGraph {
     * whose per-root state answers a different question). The
     * feature-graph primitive behind "hops from any seed entity".
     *
-    * Pure frontier iteration: each step is one equi-join of the frontier
-    * against the (deduped) edge list + one anti-join against the known
-    * set — state is O(|V|) total, localCheckpoint truncates lineage, and
-    * a frontier still alive at `maxIters` THROWS (a silently truncated
-    * BFS would look like a valid distance map). `reverse` walks edges
-    * backwards (value → referrer). Output: (e, dist). */
+    * One [[Fixpoint.frontier]] keyed by `e` alone (see [[Fixpoint]] for
+    * its pins and jobs per level); a frontier still alive at `maxIters`
+    * THROWS (a silently truncated BFS would look like a valid distance
+    * map). `reverse` walks edges backwards (value → referrer).
+    * Output: (e, dist). */
   def shortestPaths(ts: TripleStore, roots: DataFrame,
       attrs: Option[Seq[String]] = None, reverse: Boolean = false,
       maxIters: Int = 20): DataFrame = {
-    val spark = ts.spark
-    import spark.implicits._
-    val es0 = attrs.map(as => ts.edges.where(col("a").isInCollection(as)))
+    val es = attrs.map(as => ts.edges.where(col("a").isInCollection(as)))
       .getOrElse(ts.edges)
-    val es = (if (reverse) es0.select($"vref".as("src"), $"e".as("dst"))
-              else es0.select($"e".as("src"), $"vref".as("dst")))
-      .distinct().localCheckpoint(eager = false)
-    var known = roots.select($"e").distinct()
-      .select($"e", lit(0L).as("dist")).localCheckpoint(eager = true)
-    var frontier = known.select($"e")
-    var d = 0L
-    var sincePin = 0
-    var n = frontier.count()
-    while (n > 0 && d < maxIters) {
-      d += 1
-      val next = es.join(frontier.withColumnRenamed("e", "src"), Seq("src"))
-        .select($"dst".as("e")).distinct()
-        .join(known, Seq("e"), "left_anti")
-        .localCheckpoint(eager = true)
-      n = next.count()
-      if (n > 0) {
-        // lazy union of the per-level CHECKPOINTED deltas: the anti-join
-        // unions ≤ maxIters materialized leaves — no recompute and no
-        // third per-level job re-checkpointing the running known set.
-        // Re-pin every 8 levels (the datalog loop's cadence) so a deep
-        // graph's anti-join plan fan-in stays bounded instead of
-        // growing O(d²) plan nodes over the traversal.
-        known = known.unionByName(next.select($"e", lit(d).as("dist")))
-        sincePin += 1
-        if (sincePin >= 8) {
-          known = known.localCheckpoint(eager = true); sincePin = 0
-        }
-        frontier = next.select($"e")
-      }
-    }
-    if (n > 0) throw new IllegalStateException(
+    val (src, dst) = if (reverse) ("vref", "e") else ("e", "vref")
+    val levels = Fixpoint.frontier(roots.select(col("e")).distinct(), Seq("e"),
+      es.select(col(src).as("_src"), col(dst).as("_dst")), maxIters)
+    if (levels.alive) throw new IllegalStateException(
       s"shortestPaths frontier still alive after $maxIters iterations — " +
         "raise maxIters (deep graph) or check for unexpected edges")
-    known
+    levels.frames.zipWithIndex
+      .map { case (f, d) => f.select(col("e"), lit(d.toLong).as("dist")) }
+      .reduce(_ unionByName _)
   }
 
   /** Fixed-iteration PageRank as pure DataFrame joins, with EXACTLY the

@@ -248,6 +248,24 @@ class TripleStoreSpec extends AnyFunSuite {
     assert(bRow.getString(1) === "x")
   }
 
+  test("pull pins an entity frame whose projection computes: a UDF over " +
+      "a local eid list runs once per row, not once per fan-out branch") {
+    val ts = tinyStore(Seq(
+      ("e1", "p:name", "ada", 0L), ("e2", "p:name", "bob", 0L),
+      ("e1", "p:likes", "e2", 0L)))
+    TripleStoreSpec.udfCalls.set(0)
+    val counted = udf { (x: String) =>
+      TripleStoreSpec.udfCalls.incrementAndGet(); x
+    }.asNondeterministic()
+    // a LocalRelation under a projection that CALLS something is not a
+    // bare leaf: inlined, the UDF would re-run in every branch
+    val ents = Seq("e1", "e2", "e3").toDF("x").select(counted($"x").as("e"))
+    val out = ts.pull(ents, Seq(PWild, PRevIds("p:likes")))
+      .select($"e").as[String].collect().sorted.toList
+    assert(out === List("e1", "e2", "e3"))
+    assert(TripleStoreSpec.udfCalls.get === 3)
+  }
+
   test("lazy refs: undeclared attr traverses iff value is a known eid " +
       "(tripl.py:184-188)") {
     // p:likes is NOT declared a ref; 'e2' IS a known eid, 'nobody' is not
@@ -976,6 +994,51 @@ class TripleStoreSpec extends AnyFunSuite {
       maxFrontier = Some(11L)).count() === 16)
   }
 
+  /** Chain a0 → a1 → … → a(n-1) through the ref attr `r:next`, every
+    * node carrying its `db:ident`. */
+  def chainStore(n: Int): TripleStore = {
+    val refTriples = (0 until n - 1).map(i => (s"a$i", "r:next", s"a${i + 1}"))
+      .toDF("e", "a", "vref")
+      .withColumn("vtype", lit(Triples.VRef))
+      .withColumn("vstr", lit(null).cast("string"))
+      .withColumn("vlong", lit(null).cast("long"))
+      .withColumn("vdbl", lit(null).cast("double"))
+      .withColumn("vbool", lit(null).cast("boolean"))
+      .withColumn("vts", lit(null).cast("timestamp_ntz"))
+      .withColumn("vbin", lit(null).cast("binary"))
+      .withColumn("txId", lit(0L))
+      .select(Triples.columns.map(col): _*)
+    val identTriples = (0 until n).map(i => (s"a$i", Triples.IdentAttr, s"a$i", 0L))
+      .toDF("e", "a", "vstr", "txId")
+      .withColumn("vtype", lit(Triples.VStr))
+      .withColumn("vlong", lit(null).cast("long"))
+      .withColumn("vdbl", lit(null).cast("double"))
+      .withColumn("vbool", lit(null).cast("boolean"))
+      .withColumn("vts", lit(null).cast("timestamp_ntz"))
+      .withColumn("vref", lit(null).cast("string"))
+      .withColumn("vbin", lit(null).cast("binary"))
+      .select(Triples.columns.map(col): _*)
+    new TripleStore(spark, refTriples.unionByName(identTriples), Map(
+      "r:next" -> AttrSchema("r:next", cardOne = false, isRef = true, Triples.VRef),
+      Triples.IdentAttr -> AttrSchema(Triples.IdentAttr, cardOne = true,
+        isRef = false, Triples.VStr)))
+  }
+
+  /** The levels a pull of `root` with `p` (a PRec over `r:next`)
+    * unrolled on a [[chainStore]]: (ident, full) per level, where a full
+    * level carries its own `next` and a capped tail renders ident-only. */
+  def unrolledChain(ts: TripleStore, root: String,
+      p: PRec): List[(String, Boolean)] = {
+    def walk(r: Row): List[(String, Boolean)] =
+      Option(r.getAs[scala.collection.Seq[Row]]("next")).flatMap(_.headOption) match {
+        case None => Nil
+        case Some(k) =>
+          val full = k.schema.fieldNames.contains("next")
+          (k.getAs[String]("ident"), full) :: (if (full) walk(k) else Nil)
+      }
+    walk(ts.pull(Seq(root).toDF("e"), Seq(PAttr(Triples.IdentAttr), p)).head())
+  }
+
   test("deep traversals cross the every-8-level visited re-pin unchanged " +
       "(18-hop chain: BFS, shortest paths, datalog closure)") {
     // 19-node chain a0→…→a18: depth 18 crosses the 8-level re-pin of the
@@ -984,23 +1047,7 @@ class TripleStoreSpec extends AnyFunSuite {
     // truncates plan lineage), and the plan the anti-join sees stays
     // bounded instead of accumulating one union leaf per level
     val n = 19
-    def refStore(edges: Seq[(String, String)]): TripleStore = {
-      val triples = edges.map { case (x, y) => (x, "r:next", y) }
-        .toDF("e", "a", "vref")
-        .withColumn("vtype", lit(Triples.VRef))
-        .withColumn("vstr", lit(null).cast("string"))
-        .withColumn("vlong", lit(null).cast("long"))
-        .withColumn("vdbl", lit(null).cast("double"))
-        .withColumn("vbool", lit(null).cast("boolean"))
-        .withColumn("vts", lit(null).cast("timestamp_ntz"))
-        .withColumn("vbin", lit(null).cast("binary"))
-        .withColumn("txId", lit(0L))
-        .select(Triples.columns.map(col): _*)
-      new TripleStore(spark, triples, Map(
-        "r:next" -> AttrSchema("r:next", cardOne = false, isRef = true,
-          Triples.VRef)))
-    }
-    val ts = refStore((0 until n - 1).map(i => (s"a$i", s"a${i + 1}")))
+    val ts = chainStore(n)
     // per-root BFS from the head: one row per depth 0..18
     val got = ts.reachable(Seq("a0").toDF("e"))
       .as[(String, String, Int)].collect().toSet
@@ -1017,6 +1064,28 @@ class TripleStoreSpec extends AnyFunSuite {
         DatalogRule(("?x", "reach", "?z"),
           Seq(("?x", "r:next", "?y"), ("?y", "reach", "?z")))))
     assert(tc.count() === (n - 1).toLong * n / 2)
+    // the PRec depth probe crosses the same re-pin: all 18 levels unroll
+    // in full (a depth of 17 would render a18 ident-only)
+    assert(unrolledChain(ts, "a0", PRec("r:next")) ===
+      (1 until n).map(i => (s"a$i", true)).toList)
+  }
+
+  test("fixpoint limits: reachable truncates, shortestPaths throws, PRec " +
+      "caps its unroll (6-node chain, limit 3)") {
+    val ts = chainStore(6)
+    val roots = Seq("a0").toDF("e")
+    // reachable stops silently at depth maxIters
+    assert(ts.reachable(roots, maxIters = 3)
+      .as[(String, String, Int)].collect().toSet ===
+      (0 to 3).map(i => (s"a$i", "a0", i)).toSet)
+    // shortestPaths refuses a frontier still alive at maxIters
+    val ex = intercept[IllegalStateException] {
+      graft.graph.RefGraph.shortestPaths(ts, roots, maxIters = 3)
+    }
+    assert(ex.getMessage.contains("frontier still alive"))
+    // PRec unrolls exactly maxDepth full levels; the 4th is ident-only
+    assert(unrolledChain(ts, "a0", PRec("r:next", maxDepth = 3)) ===
+      List(("a1", true), ("a2", true), ("a3", true), ("a4", false)))
   }
 
   test("store merge is set union over globally-unique eids (W5)") {
@@ -2582,4 +2651,9 @@ class TripleStoreSpec extends AnyFunSuite {
       s"second pull must skip the proof job (first=${j1 - j0} jobs, " +
         s"second=${j2 - j1})")
   }
+}
+
+object TripleStoreSpec {
+  /** Calls of the counting UDF in the entity-frame pin spec. */
+  val udfCalls = new java.util.concurrent.atomic.AtomicLong
 }
