@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
@@ -21,7 +20,6 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     var reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
     // --only q125,q126: builder-side iteration on a subset (prefix or
     // full name); the driver's per-round run never passes it.
@@ -43,20 +41,13 @@ object Bench {
     val outFile = positional.headOption
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
       .getOrElse("BENCH_LOCAL.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.TripleStore.TopKLiteralCap)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // Untimed warm-up: first Spark action pays JVM/codegen/parquet-footer
     // startup that belongs to the session, not to whichever query happens
     // to run first. Standard throughput-benchmark practice; q01's number
-    // is the operator's, not the JIT's.
-    try graft.sources.Tpch.raw(spark, sfDir, "lineitem").limit(1).count()
-    catch { case _: Throwable => () }
+    // is the operator's, not the JIT's. A bad sf dir fails here, with
+    // its real cause.
+    graft.sources.Tpch.raw(spark, sfDir, "lineitem").limit(1).count()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2)

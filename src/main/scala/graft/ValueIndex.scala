@@ -902,6 +902,52 @@ object ValueIndex {
     else None
   }
 
+  /** The best-bucket-first threshold walk behind both top-k probes
+    * ([[topKEids]] over an attr's buckets, [[rangeTopKEids]] over its
+    * range-kept buckets with the in-range predicate riding along). */
+  private final class TopKWalk(g: Gen, attr: String, nativeCol: String,
+      buckets: Array[BucketStat], k: Int, desc: Boolean,
+      inRange: Option[Column]) {
+    // walk order: best-bucket-first. Desc walks by min DESC and cuts on
+    // the min (every row of a walked bucket is >= cut); asc mirrors —
+    // by max ASC, cutting on the max (every row is <= cut).
+    private val walk =
+      if (desc) buckets.sortWith((x, y) => cmp(x._2, y._2) > 0)
+      else buckets.sortWith((x, y) => cmp(x._3, y._3) < 0)
+    val total: Long = buckets.map(_._4).sum
+    // "no threshold" sentinels are the order's minimum/maximum: -Inf for
+    // desc, NaN (Spark's largest value) for asc — both make scan keep
+    // every bucket and every row, NaN facts included
+    private val noCut = if (desc) Double.NegativeInfinity else Double.NaN
+    // threshold t(target): walk buckets until their counts cover the
+    // target — at least `target` rows sit on the kept side of t, so the
+    // true top-target all do too
+    private def thresholdFor(target: Long): Double = {
+      var acc = 0L
+      var cut = noCut
+      val it = walk.iterator
+      while (acc < target && it.hasNext) {
+        val b = it.next(); acc += b._4; cut = if (desc) b._2 else b._3
+      }
+      if (acc < target) noCut else cut
+    }
+    /** The kept side of t(`target`), partition-pruned to buckets that
+      * can reach it. */
+    def scan(target: Long): DataFrame = {
+      val t = thresholdFor(target)
+      val bkts =
+        if (desc) buckets.filter(b => cmp(b._3, t) >= 0).map(_._1)
+        else buckets.filter(b => cmp(b._2, t) <= 0).map(_._1)
+      val ofAttr = col("a") === attr
+      g.dat().where(inRange.fold(ofAttr)(ofAttr && _) &&
+        col("bkt").isInCollection(bkts) &&
+        (if (desc) col("vnum") >= t else col("vnum") <= t))
+    }
+    def ordered(df: DataFrame): DataFrame =
+      df.orderBy(if (desc) col(nativeCol).desc else col(nativeCol).asc)
+        .limit(k).select(col("e"))
+  }
+
   /** The top-`k` eids by `attr` through the index (descending when
     * `desc`, else ascending), restricted to `ents` when given — or None
     * when the index can't answer (attr not indexed, or `ents` so
@@ -937,54 +983,20 @@ object ValueIndex {
     val g = gen.getOrElse(resolveGeneration(spark, table))
     val buckets = preStats.getOrElse(g.bucketStats(attr))
     if (buckets.isEmpty) return None // attr not indexed → fallback
-    // walk order: best-bucket-first. Desc walks by min DESC and cuts on
-    // the min (every row of a walked bucket is >= cut); asc mirrors —
-    // by max ASC, cutting on the max (every row is <= cut).
-    val walk =
-      if (desc) buckets.sortWith((x, y) => cmp(x._2, y._2) > 0)
-      else buckets.sortWith((x, y) => cmp(x._3, y._3) < 0)
-    val total = buckets.map(_._4).sum
-    // "no threshold" sentinels are the order's minimum/maximum: -Inf for
-    // desc, NaN (Spark's largest value) for asc — both make scanPast
-    // keep every bucket and every row, NaN facts included
-    val noCut = if (desc) Double.NegativeInfinity else Double.NaN
-    // threshold t(target): walk buckets until their counts cover the
-    // target — at least `target` rows sit on the kept side of t, so the
-    // true top-target all do too
-    def thresholdFor(target: Long): Double = {
-      var acc = 0L
-      var cut = noCut
-      val it = walk.iterator
-      while (acc < target && it.hasNext) {
-        val b = it.next(); acc += b._4; cut = if (desc) b._2 else b._3
-      }
-      if (acc < target) noCut else cut
-    }
-    // the kept side of t, partition-pruned to buckets that can reach it
-    def scanPast(t: Double): DataFrame = {
-      val bkts =
-        if (desc) buckets.filter(b => cmp(b._3, t) >= 0).map(_._1)
-        else buckets.filter(b => cmp(b._2, t) <= 0).map(_._1)
-      g.dat().where(col("a") === attr && col("bkt").isInCollection(bkts) &&
-        (if (desc) col("vnum") >= t else col("vnum") <= t))
-    }
-    def ordered(df: DataFrame): DataFrame =
-      df.orderBy(if (desc) col(nativeCol).desc else col(nativeCol).asc)
-        .limit(k).select(col("e"))
+    val w = new TopKWalk(g, attr, nativeCol, buckets, k, desc, None)
     ents match {
       case None =>
         // exact counts → one decisive threshold, no actions here (if
         // the whole universe holds < k facts, the un-thresholded scan
         // IS the full answer set and limit(k) is a no-op)
-        Some(ordered(scanPast(thresholdFor(math.min(k.toLong, total)))))
+        Some(w.ordered(w.scan(math.min(k.toLong, w.total))))
       case Some(es) =>
         var target = k.toLong
         while (true) {
-          val cand = scanPast(thresholdFor(target))
-            .join(es, Seq("e"), "left_semi")
-          if (cand.count() >= k) return Some(ordered(cand))
-          if (target >= total) return None
-          target = math.min(total, target * 4)
+          val cand = w.scan(target).join(es, Seq("e"), "left_semi")
+          if (cand.count() >= k) return Some(w.ordered(cand))
+          if (target >= w.total) return None
+          target = math.min(w.total, target * 4)
         }
         None // unreachable
     }
@@ -1194,43 +1206,19 @@ object ValueIndex {
       r: graft.query.MRange, k: Int, desc: Boolean): Option[DataFrame] =
     rangeProbe(spark, table, attr, vtype, r).flatMap {
       case (g, keep, sLo, sHi) =>
-        val inRange = rangePred(keep, nativeCol, r, sLo, sHi)
-        val walk =
-          if (desc) keep.sortWith((x, y) => cmp(x._2, y._2) > 0)
-          else keep.sortWith((x, y) => cmp(x._3, y._3) < 0)
-        val total = keep.map(_._4).sum
-        val noCut = if (desc) Double.NegativeInfinity else Double.NaN
-        def thresholdFor(target: Long): Double = {
-          var acc = 0L
-          var cut = noCut
-          val it = walk.iterator
-          while (acc < target && it.hasNext) {
-            val b = it.next(); acc += b._4; cut = if (desc) b._2 else b._3
-          }
-          if (acc < target) noCut else cut
-        }
-        def scanPast(t: Double): DataFrame = {
-          val bkts =
-            if (desc) keep.filter(b => cmp(b._3, t) >= 0).map(_._1)
-            else keep.filter(b => cmp(b._2, t) <= 0).map(_._1)
-          g.dat().where(col("a") === attr && inRange &&
-            col("bkt").isInCollection(bkts) &&
-            (if (desc) col("vnum") >= t else col("vnum") <= t))
-        }
-        def ordered(df: DataFrame): DataFrame =
-          df.orderBy(if (desc) col(nativeCol).desc else col(nativeCol).asc)
-            .limit(k).select(col("e"))
+        val w = new TopKWalk(g, attr, nativeCol, keep, k, desc,
+          Some(rangePred(keep, nativeCol, r, sLo, sHi)))
         if (keep.isEmpty)
           return Some(g.dat().where(lit(false)).select(col("e")))
         var target = k.toLong
-        while (target < total) {
-          val cand = scanPast(thresholdFor(target))
-          if (cand.count() >= k) return Some(ordered(cand))
-          target = math.min(total, target * 4)
+        while (target < w.total) {
+          val cand = w.scan(target)
+          if (cand.count() >= k) return Some(w.ordered(cand))
+          target = math.min(w.total, target * 4)
         }
         // every kept bucket scanned: the in-range predicate leaves
         // exactly the full answer set
-        Some(ordered(scanPast(thresholdFor(total))))
+        Some(w.ordered(w.scan(w.total)))
     }
 
   /** EXACT count of the entities whose `attr` value lies in the range,

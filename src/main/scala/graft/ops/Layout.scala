@@ -46,27 +46,46 @@ object Layout {
     // registered — the files under it may have changed (per-run relink
     // of a pristine index), so drop the stale listing/footer caches
     // with REFRESH, but skip the per-call schema inference + DDL pair
-    if (sameRegistration(spark, table, path, buckets, keyCols))
+    if (sameRegistration(spark, table, path, Some((buckets, keyCols))))
       spark.sql(s"REFRESH TABLE $table")
     else
       registerBucketedWithSchema(spark, table, path, buckets, keyCols,
         spark.read.parquet(path).schema)
   }
 
+  /** [[registerBucketed]] for an UNBUCKETED parquet location — an
+    * index sidecar (text stats, IVF centroids) — with the same fast
+    * path. */
+  private[graft] def registerPlain(spark: org.apache.spark.sql.SparkSession,
+      table: String, path: String): Unit =
+    if (sameRegistration(spark, table, path, None))
+      spark.sql(s"REFRESH TABLE $table")
+    else {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      val schema = spark.read.parquet(path).schema
+      spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING PARQUET " +
+        s"LOCATION '$path'")
+    }
+
+  /** Is `table` a catalog table at `path` with exactly the bucket spec
+    * `bucketing` ((buckets, key columns), or None for unbucketed)? Asks
+    * the session catalog, which holds tables only: a temp view of the
+    * same name is not a registration (the DROP TABLE on the slow path
+    * removes it), and a non-file location never matches. */
   private def sameRegistration(spark: org.apache.spark.sql.SparkSession,
-      table: String, path: String, buckets: Int,
-      keyCols: Seq[String]): Boolean =
-    try {
-      spark.catalog.tableExists(table) && {
-        val m = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))
-        m.storage.locationUri.exists(u =>
-          new java.io.File(u).getAbsolutePath ==
-            new java.io.File(path).getAbsolutePath) &&
-        m.bucketSpec.exists(b => b.numBuckets == buckets &&
-          b.bucketColumnNames == keyCols)
-      }
-    } catch { case _: Exception => false }
+      table: String, path: String,
+      bucketing: Option[(Int, Seq[String])]): Boolean = {
+    val catalog = spark.sessionState.catalog
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
+    catalog.tableExists(id) && {
+      val m = catalog.getTableMetadata(id)
+      m.storage.locationUri.exists(u => u.getScheme == "file" &&
+        new java.io.File(u).getAbsolutePath ==
+          new java.io.File(path).getAbsolutePath) &&
+        m.bucketSpec.map(b => (b.numBuckets, b.bucketColumnNames)) ==
+          bucketing
+    }
+  }
 
   /** [[registerBucketed]] with a pre-read schema — lets
     * [[compactBucketed]] validate the new location BEFORE dropping the

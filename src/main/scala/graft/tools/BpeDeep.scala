@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot DEEP measurement behind the bpeLearn scaladoc's production
@@ -30,14 +29,7 @@ object BpeDeep {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val nMerges = args.lift(1).map(_.toInt).getOrElse(30000)
     val batchK = args.lift(2).map(_.toInt).getOrElse(256)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("bpe-deep").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val docs = graft.sources.Tpch.raw(spark, sfDir, "documents")
     val corpus = docs.select(concat_ws(" ",
       (0 until 8).map(j =>

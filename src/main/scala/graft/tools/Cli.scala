@@ -1139,19 +1139,7 @@ object Cli {
   }
 
   def main(argv: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-cli")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // timestamps render/convert identically on any machine
-      .config("spark.sql.session.timeZone", "UTC")
-      // pushed INs keep or-of-eq row-group semantics up to the top-k
-      // literal cap (see TripleStore.TopKLiteralCap)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.TripleStore.TopKLiteralCap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     run(spark, argv)
   }
 }

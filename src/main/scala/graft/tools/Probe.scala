@@ -1,23 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc timing harness: `runMain graft.tools.Probe <sfDir> <query>...`
   * times named SparkEntry queries in a fresh session (all queries when
   * none named). Dev tool — not part of the library API. */
 object Probe {
   def main(args: Array[String]): Unit = {
     val shuffleIdx = args.indexOf("--shuffle")
-    val shuffle = if (shuffleIdx >= 0) args(shuffleIdx + 1).toInt else 32
-    val spark = SparkSession.builder()
-      .appName("probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.TripleStore.TopKLiteralCap)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
+    if (shuffleIdx >= 0)
+      spark.conf.set("spark.sql.shuffle.partitions",
+        args(shuffleIdx + 1).toInt)
     val explain = args.contains("--explain")
     val rest = args.zipWithIndex.filterNot { case (a, i) =>
       a == "--explain" || a == "--shuffle" ||

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev profiler for the streaming/lifecycle harness queries (guide §7.1
@@ -17,14 +16,7 @@ object ProfileStream {
     val reps = sys.env.get("PROFILE_REPS").map(_.toInt).getOrElse(2)
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q161_stream_funnel_evict")
-    val spark = SparkSession.builder()
-      .appName("profile").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.TripleStore.TopKLiteralCap)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]
     def now(): Double = System.nanoTime() / 1e9
     var t0 = now()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark main: where does the ValueIndex RANGE probe start
@@ -29,14 +28,7 @@ object RangeBreakEven {
     val sizes = args.headOption
       .map(_.split(',').map(_.trim.toLong).toSeq)
       .getOrElse(Seq(200000L, 1000000L, 4000000L, 16000000L))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

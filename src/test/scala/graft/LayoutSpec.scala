@@ -93,6 +93,43 @@ class LayoutSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS rf_t")
   }
 
+  test("same-location check: a temp view of the same name is not a " +
+      "registration — both registers replace it with the table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tv").toString
+    (1L to 6L).map(i => (i, i)).toDF("k", "a")
+      .repartition(1).write.parquet(s"$dir/t")
+    val regs = Seq[(String, () => Unit)](
+      "tv_b" -> (() => Layout.registerBucketed(spark, "tv_b", s"$dir/t", 4,
+        Seq("k"))),
+      "tv_p" -> (() => Layout.registerPlain(spark, "tv_p", s"$dir/t")))
+    for ((name, register) <- regs) {
+      (1L to 3L).toDF("k").createOrReplaceTempView(name)
+      register()
+      assert(spark.table(name).count() === 6, name)
+      assert(!spark.catalog.getTable(name).isTemporary, name)
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+    }
+  }
+
+  test("registerPlain: an unchanged registration refreshes; the same " +
+      "location registered BUCKETED is re-registered unbucketed") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pl").toString
+    def write(n: Long): Unit = (1L to n).map(i => (i, i)).toDF("k", "a")
+      .repartition(1).write.mode("overwrite").parquet(s"$dir/t")
+    def spec = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("pl_t")).bucketSpec
+    write(10)
+    Layout.registerBucketed(spark, "pl_t", s"$dir/t", 4, Seq("k"))
+    assert(spec.isDefined)
+    Layout.registerPlain(spark, "pl_t", s"$dir/t")
+    assert(spec.isEmpty)
+    write(25)
+    Layout.registerPlain(spark, "pl_t", s"$dir/t")
+    assert(spark.table("pl_t").count() === 25,
+      "fast-path re-registration served a stale file listing")
+    spark.sql("DROP TABLE IF EXISTS pl_t")
+  }
+
   test("persisted text index: bm25Query matches bm25Rank and bucket-prunes " +
       "the postings scan to the query terms") {
     val dir = java.nio.file.Files.createTempDirectory("graft_txt").toString
