@@ -2,9 +2,10 @@ package graft
 
 import graft.model.Triples
 import graft.query._
-import graft.sources.Tpch
+import graft.sources.{RowIngest, Tpch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.{Files, Path, Paths}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -52,12 +53,7 @@ object SparkEntry {
       (Tpch.raw(s, dir, "region"), TableSpec("georegion", Seq("r_regionkey"),
         Seq(ColSpec("r_regionkey", "geo:key", Triples.VLong),
           ColSpec("r_name", "geo:name", Triples.VStr)), Nil)))
-    val triples = tables.map { case (df, sp) => tableToTriples(df, sp) }
-      .reduce(_ unionByName _)
-    val schemas = tables.map(_._2.attrSchemas).reduce(_ ++ _)
-    val src = graft.model.UnionTripleSource(
-      tables.map { case (df, sp) => TableSource(df, sp) })
-    new TripleStore(s, triples, schemas, preResolved = true, source = Some(src))
+    RowIngest.store(tables)
   }
 
   def oracleSql: Map[String, String] = coreSql ++ pipelineSql ++ sourceSql
@@ -71,17 +67,26 @@ object SparkEntry {
   private def scratch(name: String, sfDir: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_${name}_${dirTag(sfDir)}"
 
-  /** Project a streaming memory sink's table, pin the (small) result as
-    * ContextCleaner-owned checkpoint blocks, and DROP the temp view —
-    * a registered sink would otherwise hold the full materialized result
+  /** THE bounded memory-sink run behind every single-stream aggregate
+    * query: run `agg` into a uniquely named memory sink in `mode`
+    * (complete, or update) until the bounded input is exhausted, stop
+    * it, then project the sink's table, pin the (small) result as
+    * ContextCleaner-owned checkpoint blocks, and DROP the temp view — a
+    * registered sink would otherwise hold the full materialized result
     * in the driver catalog for the rest of the session (clearCache
     * doesn't remove temp views, and GC can't collect a live catalog
-    * entry). */
-  private def drainSink(s: SparkSession, name: String)(
+    * entry). The memory sink is an oracle-harness convenience only;
+    * the operators under test are sink-agnostic. */
+  private[graft] def drain(prefix: String, agg: DataFrame,
+      mode: String = "complete")(
       project: DataFrame => DataFrame): DataFrame = {
-    val out = project(s.table(name)).localCheckpoint(true)
-    s.catalog.dropTempView(name)
-    out
+    val s = agg.sparkSession
+    val name = s"${prefix}_mem_${System.nanoTime()}"
+    val q = agg.writeStream.format("memory").queryName(name)
+      .outputMode(mode).start()
+    try q.processAllAvailable() finally q.stop()
+    try project(s.table(name)).localCheckpoint(true)
+    finally s.catalog.dropTempView(name)
   }
 
   /** Run `body` under `n` shuffle partitions, then restore. Stateful
@@ -239,45 +244,113 @@ object SparkEntry {
       (if (format == "parquet") "" else s" fmt=$format"), Seq(""))(
       build.write.mode("overwrite").format(format).save(_))
 
-  /** A staged after-first-microbatch world ([[stagedStreamState]]):
-    * `restore()` replays the ONE capture mapping in reverse — every
-    * run-side tree relinked from its staged copy — so the per-rep
-    * restore can never drift out of sync with what staging captured. */
-  private final class StagedStream(root: String,
-      capture: Seq[(String, String)]) {
-    def restore(): Unit =
-      relink(capture.map { case (run, sub) => (root + "/" + sub, run) })
+  /** The run directories of one [[replay]]ed stream. */
+  private[graft] final case class RunDirs(in: String, out: String,
+      ckpt: String)
+
+  /** THE bounded staged-world stream run behind every multi-batch
+    * streaming query. `batches` are staged input dirs, fed in order by
+    * hardlinking each into the input dir. The run's paths are
+    * `scratch(prefix + "in" | "out" | "ckpt")`, captured under the
+    * staged root as `in`, `out` and `ckpt`, plus `extras` (run path →
+    * staged subdir: an appended index, a compacted generation).
+    *
+    * The AFTER-FIRST-BATCH world is a pure function of the sf dir, so
+    * it is [[stage]]d once per (prefix, sf) behind the stamp
+    * `"<stamp> b1=<treeFingerprint(batch 1)>"` — the checkpoint's
+    * offset log names batch 1's part files, so regenerated batch-1
+    * inputs must restage the world; `stamp` must carry every other
+    * parameter batch 1's results depend on. Staging deletes the
+    * captured run trees, creates the input dir, runs `prepare` (an
+    * index build) and batch 1 at the real run paths, then hardlinks
+    * every captured tree that exists under the staged root.
+    *
+    * Every call then restores that world (each run tree deleted and
+    * relinked from its staged copy, if any), runs `afterRestore` (a
+    * catalog re-point, clearing a prior run's leftovers) and RESTARTS
+    * the stream over the later batches: the file source replays its
+    * offset log, sees batch 1 committed, and executes only the new
+    * batches — the production shape (a long-running loop ingests THE
+    * next batch; it does not replay its history per run).
+    *
+    * One loop serves staging and replay: feed the first batch, start,
+    * process; then feed and process each later batch; stop in
+    * `finally`. Feeding before `start` keeps a multi-file batch out of
+    * a listing that races the hardlinks, so microbatch boundaries (and
+    * with them watermark advancement points) are deterministic. */
+  private[graft] def replay(prefix: String, dir: String, stamp: String,
+      batches: Seq[String], extras: Seq[(String, String)] = Nil,
+      prepare: => Unit = (), afterRestore: => Unit = ())(
+      start: RunDirs => StreamingQuery): RunDirs = {
+    val run = RunDirs(scratch(prefix + "in", dir),
+      scratch(prefix + "out", dir), scratch(prefix + "ckpt", dir))
+    val capture =
+      Seq(run.in -> "in", run.ckpt -> "ckpt", run.out -> "out") ++ extras
+    def feed(b: String): Unit = copyRec(Paths.get(b), Paths.get(run.in))
+    def loop(bs: Seq[String]): Unit = {
+      feed(bs.head)
+      val q = start(run)
+      try bs.indices.foreach { i =>
+        if (i > 0) feed(bs(i))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val tag = prefix + "s1"
+    val root = stage(tag + "_staged", dir, s"$tag streamstagev2 $stamp " +
+        s"b1=${treeFingerprint(batches.head)}", Seq("")) { root =>
+      for ((r, _) <- capture) deleteRec(Paths.get(r))
+      Files.createDirectories(Paths.get(run.in))
+      prepare
+      loop(batches.take(1))
+      for ((r, sub) <- capture if Files.exists(Paths.get(r)))
+        copyRec(Paths.get(r), Paths.get(s"$root/$sub"))
+    }
+    for ((r, sub) <- capture) {
+      deleteRec(Paths.get(r))
+      val staged = Paths.get(s"$root/$sub")
+      if (Files.exists(staged)) copyRec(staged, Paths.get(r))
+    }
+    afterRestore
+    loop(batches.tail)
+    run
   }
 
-  /** Staging of a streaming ingest loop's AFTER-FIRST-MICROBATCH world
-    * — input dir, checkpoint tree, appended index, sink output, all
-    * named by ONE `capture` mapping (runPath → staged subdir). The
-    * first microbatch of the q110/q124 loops is a pure function of the
-    * sf dir (staged inputs against the pristine index), so `runBatch1`
-    * executes it ONCE per (tag, sf) at the real run paths; the captured
-    * trees are then hardlink-copied under the [[stage]]d root. Each
-    * bench rep [[StagedStream.restore]]s that world and RESTARTS the
-    * stream: the file source replays its offset log, sees batch 1
-    * committed, and executes only the new batch — reps pay one
-    * microbatch of real work instead of two plus tree setup, which is
-    * also the production shape (a long-running loop ingests THE next
-    * batch; it does not replay its history per run). Restart-safety of
-    * the checkpoint contract itself is spec'd separately (StreamingSpec's
-    * restart-survival test). `extraStamp` must carry every parameter
-    * the first batch's results depend on — index format stamp AND the
-    * [[treeFingerprint]]s of the staged input dirs. */
-  private def stagedStreamState(tag: String, dir: String,
-      extraStamp: String, capture: Seq[(String, String)])(
-      runBatch1: => Unit): StagedStream =
-    new StagedStream(
-      stage(tag + "_staged", dir, s"$tag streamstagev2 $extraStamp",
-        Seq("")) { root =>
-        Files.createDirectories(Paths.get(root))
-        runBatch1
-        for ((src, sub) <- capture)
-          copyRec(Paths.get(src), Paths.get(root + "/" + sub))
-      },
-      capture)
+  /** The CLI value-index lifecycle world of q170/q172: `vidxbuild`
+    * over the staged `corpus` (indexing `indexCol`) and `vidxappend` of
+    * the staged `batch` are a pure function of the sf dir, so they
+    * run ONCE per (tag, sf) and the post-append index (data +
+    * manifest, upsert duplicates in place) is hardlinked under the
+    * staged root. Every call restores it, registers it as `t`, and
+    * runs only what the oracle gates LIVE: `vidxcompact --vacuum`'s
+    * latest-txId reconciliation. `word` names the batch's identity;
+    * the stamp also carries the index format and both inputs' tree
+    * fingerprints (regenerated inputs must restage the world). */
+  private def cliVidxWorld(s: SparkSession, tag: String, dir: String,
+      t: String, indexCol: String, word: String, corpus: String,
+      batch: String): Unit = {
+    val base = scratch(tag, dir)
+    val trees = Seq(s"$base/v" -> "v", s"$base/v_manifest" -> "vman")
+    val world = stage(s"${tag}world_staged", dir,
+      s"${tag}world streamstagev2 fmt=${ValueIndex.Fmt} $word " +
+        s"in=${treeFingerprint(corpus)}|${treeFingerprint(batch)}",
+      Seq("")) { root =>
+      deleteRec(Paths.get(base))
+      graft.tools.Cli.run(s, Array("vidxbuild",
+        "-i", corpus, "--format", "parquet", "--id", "doc_id",
+        "--table", t, "--index-path", s"$base/v", "--cols", indexCol,
+        "--buckets", "8", "-o", s"$base/r0"))
+      graft.tools.Cli.run(s, Array("vidxappend",
+        "-i", batch, "--format", "parquet", "--id", "doc_id",
+        "--table", t, "-o", s"$base/r1"))
+      relink(trees.map { case (run, sub) => run -> s"$root/$sub" })
+    }
+    deleteRec(Paths.get(base)) // prior run's v2/receipts
+    relink(trees.map { case (run, sub) => s"$world/$sub" -> run })
+    ValueIndex.register(s, t, s"$base/v")
+    graft.tools.Cli.run(s, Array("vidxcompact",
+      "--table", t, "--index-path", s"$base/v2", "--buckets", "8",
+      "--vacuum", "-o", s"$base/r2"))
+  }
 
   /** Harness-side build-once-reuse LSH index: the expensive pristine
     * build (shingle + minhash over the corpus) is [[stage]]d once per
@@ -307,10 +380,10 @@ object SparkEntry {
     * (quantile sketch + range-bucketed write + manifest agg) is
     * [[stage]]d once per (tag, sf); probes never mutate the layout, so
     * every rep just registers the views over the pristine files (one
-    * DDL pair, no copy — mutating consumers use the q170/q172
-    * stagedStreamState recipe instead). Production analogue: the index
-    * already exists, append-maintained (ScaleBench times the build
-    * itself). `store` is by-name: only a stale/missing pristine
+    * DDL pair, no copy — the mutating q170/q172 consumers restore a
+    * staged world instead, [[cliVidxWorld]]). Production analogue: the
+    * index already exists, append-maintained (ScaleBench times the
+    * build itself). `store` is by-name: only a stale/missing pristine
     * evaluates it. */
   private def vidxFromPristine(s: SparkSession, tag: String, dir: String,
       table: String, attrs: Seq[String], nBuckets: Int)(
@@ -321,6 +394,11 @@ object SparkEntry {
       graft.ValueIndex.build(store, table, _, attrs, nBuckets))
     graft.ValueIndex.register(s, table, pristine)
   }
+
+  /** A `doc_id`-keyed [[RowIngest.store]] over `docs` ingested as table
+    * `t` (attrs `<t>:<col>`). */
+  private def docStore(docs: DataFrame, t: String): TripleStore =
+    RowIngest.store(Seq(docs -> RowIngest.specFor(docs, t, Seq("doc_id"))))
 
   /** The q173-FAMILY store: the documents 1/3 slice ingested as a
     * TableSource store with its n_chars ValueIndex staged pristine per
@@ -333,13 +411,7 @@ object SparkEntry {
     val docs = Tpch.raw(s, dir, "documents")
       .where(col("doc_id") % 3 === 0)
       .select(col("doc_id"), col("n_chars"))
-    val sp = graft.sources.RowIngest.specFor(docs, t, Seq("doc_id"),
-      Nil, None)
-    def store = new TripleStore(s,
-      graft.sources.RowIngest.tableToTriples(docs, sp), sp.attrSchemas,
-      preResolved = true,
-      source = Some(graft.model.UnionTripleSource(
-        Seq(graft.sources.RowIngest.TableSource(docs, sp)))))
+    def store = docStore(docs, t)
     vidxFromPristine(s, "q173vidx", dir, t, Seq(s"$t:n_chars"), 8)(store)
     store.withValueIndex(t)
   }
@@ -1173,11 +1245,7 @@ object SparkEntry {
       // value-identity with NTZ; back to NTZ on output)
       val stream = Tpch.eventsStream(s, dir)
       val agg = graft.streaming.StreamingAssert.windowedEventCounts(stream)
-      val name = "q51_mem_" + System.nanoTime()
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      drainSink(s, name)(_.select(
+      drain("q51", agg)(_.select(
         col("window.start").cast("timestamp_ntz").as("wstart"),
         col("event_type"), col("n"), round(col("sum_value"), 4).as("sum_value")))
     }),
@@ -1193,11 +1261,7 @@ object SparkEntry {
         "value" -> (col("value") >= 10.0),
         "type" -> col("event_type").isin("click", "purchase")))
       val agg = labeled.groupBy(col("dropped_at")).agg(count(lit(1)).as("n"))
-      val name = "q135_mem_" + System.nanoTime()
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      drainSink(s, name)(identity)
+      drain("q135", agg)(identity)
     }),
 
     // SLIDING-window streaming aggregation (1h windows every 30min —
@@ -1207,13 +1271,7 @@ object SparkEntry {
     "q93_stream_sliding" -> ((s, dir) => withShuffle(s, 8) {
       val stream = Tpch.eventsStream(s, dir)
       val agg = graft.streaming.StreamingAssert.slidingEventCounts(stream)
-      // memory sink = oracle-harness convenience ONLY; production sinks
-      // are files/Kafka — the operator itself is sink-agnostic
-      val name = "q93_mem_" + System.nanoTime()
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      drainSink(s, name)(_.select(
+      drain("q93", agg)(_.select(
         col("window.start").cast("timestamp_ntz").as("wstart"),
         col("event_type"), col("n"), round(col("sum_value"), 4).as("sum_value")))
     }),
@@ -1228,10 +1286,6 @@ object SparkEntry {
     // of EXACTLY the duration starts a new session).
     "q95_stream_session" -> ((s, dir) => withShuffle(s, 8) {
       import s.implicits._
-      import java.nio.file.Paths
-      val in = scratch("q95in", dir)
-      val outp = scratch("q95out", dir)
-      val ckpt = scratch("q95ckpt", dir)
       // both microbatch frames are pure functions of the sf dir: the
       // events copy and the watermark-advance sentinel (max ts + 2h)
       // are staged once behind _OK stamps and hardlinked per rep —
@@ -1248,36 +1302,22 @@ object SparkEntry {
               new java.sql.Timestamp(maxTs.getTime + 7200 * 1000L)))
             .toDF("event_id", "user_id", "ts")
         }))
-      def feed(src: String): Unit =
-        copyRec(Paths.get(src), Paths.get(in))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP")
-      def startStream() = graft.streaming.StreamingAssert
-        .sessionWindowCounts(s.readStream.schema(schema).parquet(in))
-        .writeStream.format("parquet")
-        .option("path", outp).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
       // batch 1 (every event into per-user session state) EMITS
       // nothing in append mode — sessions close only when the batch-2
       // sentinel advances the watermark — so it is pure state building,
-      // a function of the sf dir: run ONCE per (tag, sf); each rep
-      // restores the world and executes only the close-everything
-      // batch whose emissions ARE the session semantics under test
-      val staged = stagedStreamState("q95s1", dir,
-        "sessv1 " + s"b1=${treeFingerprint(batches(0))}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        java.nio.file.Files.createDirectories(Paths.get(in))
-        feed(batches(0))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
+      // a function of the sf dir: staged once per (tag, sf); each rep
+      // replays only the close-everything batch whose emissions ARE the
+      // session semantics under test
+      val run = replay("q95", dir, "sessv1", batches) { r =>
+        graft.streaming.StreamingAssert
+          .sessionWindowCounts(s.readStream
+            .schema("event_id BIGINT, user_id BIGINT, ts TIMESTAMP")
+            .parquet(r.in))
+          .writeStream.format("parquet")
+          .option("path", r.out).option("checkpointLocation", r.ckpt)
+          .outputMode("append").start()
       }
-      staged.restore()
-      val q = startStream()
-      try {
-        feed(batches(1)); q.processAllAvailable()
-      } finally q.stop()
-      s.read.parquet(outp).where(col("user_id") >= 0).select(
+      s.read.parquet(run.out).where(col("user_id") >= 0).select(
         col("session_window.start").cast("timestamp_ntz").as("wstart"),
         col("session_window.end").cast("timestamp_ntz").as("wend"),
         col("user_id"), col("n"))
@@ -1296,14 +1336,7 @@ object SparkEntry {
         .parquet(dir + "/documents.parque*")
       val dd = graft.streaming.StreamingDedup.exactClusters(
         read().unionAll(read()), "doc_id", "text")
-      // memory sink = oracle-harness convenience ONLY (bounded input,
-      // driver-side compare); a production pipeline sinks to files/Kafka
-      // — the operator itself (StreamingDedup) is sink-agnostic
-      val name = "q60_mem_" + System.nanoTime()
-      val q = dd.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      drainSink(s, name)(_.select(col("keep_id"), col("n_copies")))
+      drain("q60", dd)(_.select(col("keep_id"), col("n_copies")))
     }),
 
     // Gopher-style repetition/boilerplate scores (dup-word fraction,
@@ -1631,10 +1664,6 @@ object SparkEntry {
       // long-running production shape — and executes only the
       // watermark-advancing sentinel batch.
       import s.implicits._
-      import java.nio.file.Paths
-      val in = scratch("q69in", dir)
-      val outp = scratch("q69out", dir)
-      val ckpt = scratch("q69ckpt", dir)
       lazy val evs = Tpch.raw(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"), col("value"))
@@ -1647,13 +1676,10 @@ object SparkEntry {
               new java.sql.Timestamp(maxTs.getTime + 7200 * 1000L), 0.0))
             .toDF("event_id", "user_id", "event_type", "ts", "value")
         }))
-      def feed(src: String): Unit =
-        copyRec(Paths.get(src), Paths.get(in))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id BIGINT, user_id BIGINT, event_type STRING, " +
-          "ts TIMESTAMP, value DOUBLE")
-      def startStream() = {
-        val stream = s.readStream.schema(schema).parquet(in)
+      val run = replay("q69", dir, "ssjv1", batches) { r =>
+        val stream = s.readStream.schema("event_id BIGINT, " +
+          "user_id BIGINT, event_type STRING, ts TIMESTAMP, value DOUBLE")
+          .parquet(r.in)
         val clicks = stream.where(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("cts"))
@@ -1664,24 +1690,12 @@ object SparkEntry {
             clicks, purchases, "user_id", "cts", "pts",
             within = "1 HOUR", watermarkDelay = "30 minutes")
           .writeStream.format("parquet")
-          .option("path", outp).option("checkpointLocation", ckpt)
+          .option("path", r.out).option("checkpointLocation", r.ckpt)
           .outputMode("append").start()
       }
-      val staged = stagedStreamState("q69s1", dir,
-        "ssjv1 " + s"b1=${treeFingerprint(batches(0))}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        java.nio.file.Files.createDirectories(Paths.get(in))
-        feed(batches(0))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
-      }
-      staged.restore()
-      val q = startStream()
-      try { feed(batches(1)); q.processAllAvailable() } finally q.stop()
       // the noop sentinel enters neither join side, so the sink holds
       // exactly the batch-1 matches
-      s.read.parquet(outp).select(col("click_id"), col("purchase_id"),
+      s.read.parquet(run.out).select(col("click_id"), col("purchase_id"),
         round(col("value"), 4).as("value"))
     }),
 
@@ -1809,10 +1823,6 @@ object SparkEntry {
     // exactly what the original matched). The oracle reproduces all of
     // that in SQL from the mod-10 split alone.
     "q110_stream_ingest_loop" -> ((s, dir) => withShuffle(s, 8) {
-      import java.nio.file.Paths
-      val in = scratch("q110in", dir)
-      val outp = scratch("q110out", dir)
-      val ckpt = scratch("q110ckpt", dir)
       val work = scratch("q110idx", dir)
       val table = s"q110idx_${dirTag(dir)}"
       val docs = Tpch.raw(s, dir, "documents")
@@ -1827,47 +1837,34 @@ object SparkEntry {
         docs.where(col("doc_id") % 10 === 0)
           .select((col("doc_id") + off).as("doc_id"), col("text"))
       }
+      // batch 1 (the loop's history) is staged once per (tag, sf) with
+      // its appended index; each rep replays only the NEW microbatch
+      // against the restored index, re-registered over the work trees.
       // intraBatch = false: this query's oracle models the loop's
       // ORIGINAL cross-batch contract (batch 2's copies match appended
       // batch-1 survivors); the intra-batch step is covered by q114.
       // The batchId-keyed sink exercises the replay-idempotent path.
-      def startStream(ckptLoc: String) =
+      val run = replay("q110", dir,
+        "lshv2 k=64 bands=32 rpb=2 thr=0.5 intra=false", Seq(b1, b2),
+        extras = Seq(work -> "idx", (work + "_sh") -> "idx_sh"),
+        prepare = lshIndexFromPristine(s,
+          docs.where(col("doc_id") % 10 =!= 0), "q110idx", dir, table,
+          work, k = 64, bands = 32, rowsPerBand = 2),
+        afterRestore = {
+          graft.ops.Layout.registerBucketed(s, table, work, 16, Seq("_bh"))
+          graft.ops.Layout.registerBucketed(s, table + "_sh", work + "_sh",
+            16, Seq("corpus_id"))
+        }) { r =>
         graft.streaming.StreamingDedup.nearDedupIngest(
-            s.readStream.schema("doc_id BIGINT, text STRING").parquet(in),
+            s.readStream.schema("doc_id BIGINT, text STRING").parquet(r.in),
             "doc_id", "text", table, threshold = 0.5,
             k = 64, bands = 32, rowsPerBand = 2,
-            onMatches = graft.streaming.StreamingDedup.parquetMatchSink(outp),
+            onMatches = graft.streaming.StreamingDedup.parquetMatchSink(r.out),
             intraBatch = false)
-          .option("checkpointLocation", ckptLoc)
+          .option("checkpointLocation", r.ckpt)
           .start()
-      // batch 1 (the loop's history) runs ONCE per (tag, sf): its input
-      // files, checkpoint, appended index, and sink output are staged;
-      // each rep restores that world and executes only the NEW
-      // microbatch — the production shape (a live loop ingests the next
-      // batch, it does not replay its history per run). The stamp folds
-      // in the staged inputs' tree fingerprints: the checkpoint's
-      // offset log pins batch-1 part-file NAMES, so regenerated inputs
-      // must restage the checkpoint too.
-      val staged = stagedStreamState("q110s1", dir,
-        "lshv2 k=64 bands=32 rpb=2 thr=0.5 intra=false " +
-          s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (work, "idx"),
-          (work + "_sh", "idx_sh"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        lshIndexFromPristine(s, docs.where(col("doc_id") % 10 =!= 0),
-          "q110idx", dir, table, work, k = 64, bands = 32, rowsPerBand = 2)
-        copyRec(Paths.get(b1), Paths.get(in))
-        val q = startStream(ckpt)
-        try q.processAllAvailable() finally q.stop()
       }
-      staged.restore()
-      graft.ops.Layout.registerBucketed(s, table, work, 16, Seq("_bh"))
-      graft.ops.Layout.registerBucketed(s, table + "_sh", work + "_sh",
-        16, Seq("corpus_id"))
-      copyRec(Paths.get(b2), Paths.get(in))
-      val q = startStream(ckpt)
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(outp + "/batch_*")
+      s.read.parquet(run.out + "/batch_*")
         .select(col("new_id"), col("corpus_id"), col("jaccard"))
     }),
 
@@ -1881,7 +1878,7 @@ object SparkEntry {
     // smaller-id drop rule and the cross join in SQL.
     "q114_ingest_intrabatch" -> ((s, dir) => withShuffle(s, 8) {
       val outp = scratch("q114out", dir)
-      deleteRec(java.nio.file.Paths.get(outp))
+      deleteRec(Paths.get(outp))
       // 1/3 corpus slice (q170's trim): the operator under test —
       // intra-batch canonicalization + index dedup + guarded append —
       // is corpus-size-independent; the batch split widens to %5 so
@@ -1975,10 +1972,6 @@ object SparkEntry {
     // oracle replays both batches from the mod-10 split alone; pair
     // margins are q123's (same vectors, same 0.45 threshold).
     "q124_sem_ingest_loop" -> ((s, dir) => withShuffle(s, 8) {
-      import java.nio.file.Paths
-      val in = scratch("q124in", dir)
-      val outp = scratch("q124out", dir)
-      val ckpt = scratch("q124ckpt", dir)
       val work = scratch("q124idx", dir)
       val table = s"q124idx_${dirTag(dir)}"
       val emb = Tpch.raw(s, dir, "embeddings")
@@ -1994,39 +1987,31 @@ object SparkEntry {
         emb.where(col("vec_id") % 10 === 0)
           .select((col("vec_id") + off).as("vec_id"), col("embedding"))
       }
-      def startStream(ckptLoc: String) =
+      // q110's staging discipline, IVF edition: batch 1 (the loop's
+      // history — cell-assign + same-cell dedup + survivor append) is
+      // staged once per (tag, sf) with its index; reps replay only the
+      // new microbatch
+      val run = replay("q124", dir,
+        "ivfv1 cells=8 iters=0 ci=minid thr=0.45 intra=false", Seq(b1, b2),
+        extras = Seq(work -> "idx", (work + "_centroids") -> "idx_cent"),
+        prepare = ivfIndexFromPristine(s,
+          emb.where(col("vec_id") % 10 =!= 0), "q124idx", dir, table, work,
+          nCells = 8, iters = 0, centroidInit = "minid", mutates = true),
+        afterRestore = {
+          graft.ops.Layout.registerBucketed(s, table, work, 16, Seq("_cell"))
+          graft.ops.Layout.registerPlain(s, table + "_centroids",
+            work + "_centroids")
+        }) { r =>
         graft.streaming.StreamingDedup.semanticDedupIngest(
             s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-              .parquet(in),
+              .parquet(r.in),
             "vec_id", "embedding", table, threshold = 0.45,
-            onMatches = graft.streaming.StreamingDedup.parquetMatchSink(outp),
+            onMatches = graft.streaming.StreamingDedup.parquetMatchSink(r.out),
             intraBatch = false)
-          .option("checkpointLocation", ckptLoc)
+          .option("checkpointLocation", r.ckpt)
           .start()
-      // q110's staging discipline, IVF edition: batch 1 (the loop's
-      // history — cell-assign + same-cell dedup + survivor append) runs
-      // once per (tag, sf); reps restore its input/checkpoint/index/
-      // output world and execute only the new microbatch
-      val staged = stagedStreamState("q124s1", dir,
-        "ivfv1 cells=8 iters=0 ci=minid thr=0.45 intra=false " +
-          s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (work, "idx"),
-          (work + "_centroids", "idx_cent"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        ivfIndexFromPristine(s, emb.where(col("vec_id") % 10 =!= 0),
-          "q124idx", dir, table, work,
-          nCells = 8, iters = 0, centroidInit = "minid", mutates = true)
-        copyRec(Paths.get(b1), Paths.get(in))
-        val q = startStream(ckpt)
-        try q.processAllAvailable() finally q.stop()
       }
-      staged.restore()
-      graft.ops.Layout.registerBucketed(s, table, work, 16, Seq("_cell"))
-      graft.ops.Layout.registerPlain(s, table + "_centroids", work + "_centroids")
-      copyRec(Paths.get(b2), Paths.get(in))
-      val q = startStream(ckpt)
-      try q.processAllAvailable() finally q.stop()
-      s.read.parquet(outp + "/batch_*")
+      s.read.parquet(run.out + "/batch_*")
         .select(col("new_id"), col("corpus_id"))
     }),
 
@@ -2098,47 +2083,12 @@ object SparkEntry {
         docs.where(col("doc_id") % 10 =!= 0))
       val batch = stagedInput("q170batch_m3", dir)(
         docs.where(col("doc_id") % 10 === 0 || col("doc_id") % 10 === 5))
-      val base = scratch("q170", dir)
-      // the POST-APPEND index (data + manifest, upsert duplicates in
-      // place) is a pure function of the sf dir: the build+append CLI
-      // invocations run ONCE per (tag, sf) behind a stamped marker and
-      // the resulting trees are hardlink-restored per rep — each rep
-      // executes only what the oracle actually gates, vidxcompact's
-      // latest-txId reconciliation + the indexed probe, LIVE. The
-      // stamp carries the index format and both staged inputs' tree
-      // fingerprints (regenerated inputs must restage the world).
-      val world = stagedStreamState("q170world", dir,
-        extraStamp = s"fmt=${graft.ValueIndex.Fmt} txv2 " +
-          s"in=${treeFingerprint(corpus)}|${treeFingerprint(batch)}",
-        capture = Seq(s"$base/v" -> "v", s"$base/v_manifest" -> "vman")) {
-        deleteRec(java.nio.file.Paths.get(base))
-        graft.tools.Cli.run(s, Array("vidxbuild",
-          "-i", corpus, "--format", "parquet", "--id", "doc_id",
-          "--table", t, "--index-path", s"$base/v", "--cols", "doc_id",
-          "--buckets", "8", "-o", s"$base/r0"))
-        graft.tools.Cli.run(s, Array("vidxappend",
-          "-i", batch, "--format", "parquet", "--id", "doc_id",
-          "--table", t, "-o", s"$base/r1"))
-      }
-      deleteRec(java.nio.file.Paths.get(base)) // prior rep's v2/receipts
-      world.restore()
-      graft.ValueIndex.register(s, t, s"$base/v")
-      graft.tools.Cli.run(s, Array("vidxcompact",
-        "--table", t, "--index-path", s"$base/v2", "--buckets", "8",
-        "--vacuum", "-o", s"$base/r2"))
+      cliVidxWorld(s, "q170", dir, t, "doc_id", "txv2", corpus, batch)
       // query through the compacted index: same ingest spec as the CLI
       // (same table name ⇒ same md5 eids), single-clause universe match
       // on the sort attr, PWild blocks base-table fusion so the probe
       // owns the ranking
-      val sp = graft.sources.RowIngest.specFor(docs, t, Seq("doc_id"),
-        Nil, None)
-      val store = new TripleStore(s,
-        graft.sources.RowIngest.tableToTriples(docs, sp), sp.attrSchemas,
-        preResolved = true,
-        source = Some(graft.model.UnionTripleSource(
-          Seq(graft.sources.RowIngest.TableSource(docs, sp)))))
-        .withValueIndex(t)
-      store.pullMany(
+      docStore(docs, t).withValueIndex(t).pullMany(
           Seq(s"$t:doc_id" -> MAny),
           Seq(PAttr(s"$t:doc_id"), PWild),
           sortBy = Some("doc_id"), desc = true, limit = Some(10))
@@ -2183,26 +2133,7 @@ object SparkEntry {
           top20(docs.where(col("doc_id") % 10 =!= 0))
             .select(col("doc_id"),
               (col("n_chars") - 1000000L).as("n_chars"))))
-      val base = scratch("q172", dir)
-      val world = stagedStreamState("q172world", dir,
-        extraStamp = s"fmt=${graft.ValueIndex.Fmt} top20dec " +
-          s"in=${treeFingerprint(corpus)}|${treeFingerprint(batch)}",
-        capture = Seq(s"$base/v" -> "v", s"$base/v_manifest" -> "vman")) {
-        deleteRec(java.nio.file.Paths.get(base))
-        graft.tools.Cli.run(s, Array("vidxbuild",
-          "-i", corpus, "--format", "parquet", "--id", "doc_id",
-          "--table", t, "--index-path", s"$base/v", "--cols", "n_chars",
-          "--buckets", "8", "-o", s"$base/r0"))
-        graft.tools.Cli.run(s, Array("vidxappend",
-          "-i", batch, "--format", "parquet", "--id", "doc_id",
-          "--table", t, "-o", s"$base/r1"))
-      }
-      deleteRec(java.nio.file.Paths.get(base))
-      world.restore()
-      graft.ValueIndex.register(s, t, s"$base/v")
-      graft.tools.Cli.run(s, Array("vidxcompact",
-        "--table", t, "--index-path", s"$base/v2", "--buckets", "8",
-        "--vacuum", "-o", s"$base/r2"))
+      cliVidxWorld(s, "q172", dir, t, "n_chars", "top20dec", corpus, batch)
       // probe store = the FINAL latest-wins state (snapshot contract:
       // the index must cover the store's facts), same ingest spec ⇒
       // same md5 eids as the CLI lifecycle. Derived from the STAGED
@@ -2213,16 +2144,7 @@ object SparkEntry {
       val finalDocs = batchDf.unionByName(
         s.read.parquet(corpus)
           .join(batchDf.select(col("doc_id")), Seq("doc_id"), "left_anti"))
-      val sp = graft.sources.RowIngest.specFor(finalDocs, t, Seq("doc_id"),
-        Nil, None)
-      val store = new TripleStore(s,
-        graft.sources.RowIngest.tableToTriples(finalDocs, sp),
-        sp.attrSchemas,
-        preResolved = true,
-        source = Some(graft.model.UnionTripleSource(
-          Seq(graft.sources.RowIngest.TableSource(finalDocs, sp)))))
-        .withValueIndex(t)
-      store.pullMany(
+      docStore(finalDocs, t).withValueIndex(t).pullMany(
           Seq(s"$t:n_chars" -> MAny),
           Seq(PAttr(s"$t:n_chars"), PWild),
           sortBy = Some("n_chars"), desc = true, limit = Some(10))
@@ -2437,13 +2359,7 @@ object SparkEntry {
       val docs = Tpch.raw(s, dir, "documents")
         .where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("n_chars"))
-      val sp = graft.sources.RowIngest.specFor(docs, t, Seq("doc_id"),
-        Nil, None)
-      def store = new TripleStore(s,
-        graft.sources.RowIngest.tableToTriples(docs, sp), sp.attrSchemas,
-        preResolved = true,
-        source = Some(graft.model.UnionTripleSource(
-          Seq(graft.sources.RowIngest.TableSource(docs, sp)))))
+      def store = docStore(docs, t)
       // 16 buckets (not the family's 8): the ≤1/4 driving gate reads
       // kept-bucket FACT counts, and with 8 buckets each conjunct's
       // kept set (~2 buckets ≈ 1/4 of facts) sits exactly on the
@@ -2472,13 +2388,7 @@ object SparkEntry {
       val docs = Tpch.raw(s, dir, "documents")
         .where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("lang"))
-      val sp = graft.sources.RowIngest.specFor(docs, t, Seq("doc_id"),
-        Nil, None)
-      def store = new TripleStore(s,
-        graft.sources.RowIngest.tableToTriples(docs, sp), sp.attrSchemas,
-        preResolved = true,
-        source = Some(graft.model.UnionTripleSource(
-          Seq(graft.sources.RowIngest.TableSource(docs, sp)))))
+      def store = docStore(docs, t)
       vidxFromPristine(s, "q178vidx", dir, t, Seq(s"$t:lang"), 8)(store)
       store.withValueIndex(t)
         .pullMany(
@@ -2502,9 +2412,6 @@ object SparkEntry {
     // restores the world and executes one new microbatch + compact +
     // probe — the production cadence.
     "q180_stream_vidx_ingest" -> ((s, dir) => withShuffle(s, 8) {
-      import java.nio.file.Paths
-      val in = scratch("q180in", dir)
-      val ckpt = scratch("q180ckpt", dir)
       val work = scratch("q180idx", dir)
       val compacted = scratch("q180idxc", dir)
       val t = s"q180vidx_${dirTag(dir)}"
@@ -2514,44 +2421,24 @@ object SparkEntry {
         docs.where(col("doc_id") % 3 === 1))
       val b2 = stagedInput("q180b2", dir)(
         docs.where(col("doc_id") % 3 === 2))
-      def batchStore(df: org.apache.spark.sql.DataFrame): TripleStore = {
-        val sp = graft.sources.RowIngest.specFor(df, t, Seq("doc_id"),
-          Nil, None)
-        new TripleStore(s, graft.sources.RowIngest.tableToTriples(df, sp),
-          sp.attrSchemas, preResolved = true,
-          source = Some(graft.model.UnionTripleSource(
-            Seq(graft.sources.RowIngest.TableSource(df, sp)))))
-      }
-      def startStream() =
-        s.readStream.schema("doc_id BIGINT, n_chars BIGINT").parquet(in)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (!b.isEmpty) graft.ValueIndex.append(batchStore(b), t)
-          }.start()
-      val staged = stagedStreamState("q180s1", dir,
-        s"vidx fmt=${graft.ValueIndex.Fmt} nb=8 " +
-          s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (work, "idx"),
-          (work + "_manifest", "idx_manifest"))) {
-        for (d <- Seq(in, ckpt, work, work + "_manifest"))
-          deleteRec(Paths.get(d))
-        graft.ValueIndex.build(
-          batchStore(docs.where(col("doc_id") % 3 === 0)), t, work,
-          Seq(s"$t:n_chars"), 8)
-        copyRec(Paths.get(b1), Paths.get(in))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
-      }
-      staged.restore()
       // restore re-links the WORK tree; the catalog may still name a
       // prior rep's compacted path — re-point atomically
-      graft.ValueIndex.register(s, t, work)
-      copyRec(Paths.get(b2), Paths.get(in))
-      val q = startStream()
-      try q.processAllAvailable() finally q.stop()
+      replay("q180", dir, s"vidx fmt=${graft.ValueIndex.Fmt} nb=8",
+        Seq(b1, b2),
+        extras = Seq(work -> "idx", (work + "_manifest") -> "idx_manifest"),
+        prepare = graft.ValueIndex.build(
+          docStore(docs.where(col("doc_id") % 3 === 0), t), t, work,
+          Seq(s"$t:n_chars"), 8),
+        afterRestore = graft.ValueIndex.register(s, t, work)) { r =>
+        s.readStream.schema("doc_id BIGINT, n_chars BIGINT").parquet(r.in)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", r.ckpt)
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            if (!b.isEmpty) graft.ValueIndex.append(docStore(b, t), t)
+          }.start()
+      }
       graft.ValueIndex.compact(s, t, compacted, nBuckets = 8)
-      batchStore(docs).withValueIndex(t)
+      docStore(docs, t).withValueIndex(t)
         .pullMany(
           Seq(s"$t:n_chars" -> MRange(lo = Some(450L), loStrict = true)),
           Seq(PAttr(s"$t:doc_id"), PWild))
@@ -2578,9 +2465,6 @@ object SparkEntry {
     // the production cadence (a long-running loop ingests THE next
     // batch; it does not replay its history per run).
     "q190_stream_autocompact" -> ((s, dir) => withShuffle(s, 8) {
-      import java.nio.file.Paths
-      val in = scratch("q190in", dir)
-      val ckpt = scratch("q190ckpt", dir)
       val work = scratch("q190idx", dir)
       val t = s"q190vidx_${dirTag(dir)}"
       val docs = Tpch.raw(s, dir, "documents")
@@ -2589,55 +2473,39 @@ object SparkEntry {
         docs.where(col("doc_id") % 3 === 1))
       val b2 = stagedInput("q190b2", dir)(
         docs.where(col("doc_id") % 3 === 2))
-      def batchStore(df: org.apache.spark.sql.DataFrame): TripleStore = {
-        val sp = graft.sources.RowIngest.specFor(df, t, Seq("doc_id"),
-          Nil, None)
-        new TripleStore(s, graft.sources.RowIngest.tableToTriples(df, sp),
-          sp.attrSchemas, preResolved = true,
-          source = Some(graft.model.UnionTripleSource(
-            Seq(graft.sources.RowIngest.TableSource(df, sp)))))
-      }
-      def startStream() =
-        s.readStream.schema("doc_id BIGINT, n_chars BIGINT").parquet(in)
+      // batch 0's valve compacts into work-g0 — that generation (plus
+      // the input and checkpoint trees) IS the staged world. After the
+      // restore the catalog may still name a prior rep's path —
+      // re-point atomically. The next microbatch id is 1, so its valve
+      // compacts into work-g1: clear any prior rep's tree so the write
+      // starts clean.
+      replay("q190", dir, s"vidx fmt=${graft.ValueIndex.Fmt} nb=8 frag=1.5",
+        Seq(b1, b2),
+        extras = Seq((work + "-g0") -> "idx_g0",
+          (work + "-g0_manifest") -> "idx_g0_manifest"),
+        prepare = {
+          for (d <- Seq(work, work + "_manifest")) deleteRec(Paths.get(d))
+          graft.ValueIndex.build(
+            docStore(docs.where(col("doc_id") % 3 === 0), t), t, work,
+            Seq(s"$t:n_chars"), 8)
+        },
+        afterRestore = {
+          graft.ValueIndex.register(s, t, work + "-g0")
+          for (d <- Seq(work + "-g1", work + "-g1_manifest"))
+            deleteRec(Paths.get(d))
+        }) { r =>
+        s.readStream.schema("doc_id BIGINT, n_chars BIGINT").parquet(r.in)
           .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          .option("checkpointLocation", r.ckpt)
+          .foreachBatch { (b: DataFrame, id: Long) =>
             if (!b.isEmpty) {
-              graft.ValueIndex.append(batchStore(b), t)
+              graft.ValueIndex.append(docStore(b, t), t)
               graft.ValueIndex.compactIfFragmented(s, t,
                 s"$work-g$id", maxFrag = 1.5, nBuckets = 8): Unit
             }
           }.start()
-      // batch 0's valve compacts into work-g0 — that generation (plus
-      // the input and checkpoint trees) IS the staged world
-      val staged = stagedStreamState("q190s1", dir,
-        s"vidx fmt=${graft.ValueIndex.Fmt} nb=8 frag=1.5 " +
-          s"b1=${treeFingerprint(b1)} b2=${treeFingerprint(b2)}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"),
-          (work + "-g0", "idx_g0"),
-          (work + "-g0_manifest", "idx_g0_manifest"))) {
-        for (d <- Seq(in, ckpt, work, work + "_manifest",
-            work + "-g0", work + "-g0_manifest"))
-          deleteRec(Paths.get(d))
-        graft.ValueIndex.build(
-          batchStore(docs.where(col("doc_id") % 3 === 0)), t, work,
-          Seq(s"$t:n_chars"), 8)
-        copyRec(Paths.get(b1), Paths.get(in))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
       }
-      staged.restore()
-      // restore re-links the after-batch-0 generation; the catalog may
-      // still name a prior rep's path — re-point atomically. The next
-      // microbatch id is 1, so its valve compacts into work-g1: clear
-      // any prior rep's tree so the write starts clean.
-      graft.ValueIndex.register(s, t, work + "-g0")
-      for (d <- Seq(work + "-g1", work + "-g1_manifest"))
-        deleteRec(Paths.get(d))
-      copyRec(Paths.get(b2), Paths.get(in))
-      val q = startStream()
-      try q.processAllAvailable() finally q.stop()
-      batchStore(docs).withValueIndex(t)
+      docStore(docs, t).withValueIndex(t)
         .pullMany(
           Seq(s"$t:n_chars" -> MRange(lo = Some(450L), loStrict = true)),
           Seq(PAttr(s"$t:doc_id"), PWild))
@@ -2659,13 +2527,7 @@ object SparkEntry {
       val docs = Tpch.raw(s, dir, "documents")
         .where(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("n_chars"), col("lang"))
-      val sp = graft.sources.RowIngest.specFor(docs, t, Seq("doc_id"),
-        Nil, None)
-      def store = new TripleStore(s,
-        graft.sources.RowIngest.tableToTriples(docs, sp), sp.attrSchemas,
-        preResolved = true,
-        source = Some(graft.model.UnionTripleSource(
-          Seq(graft.sources.RowIngest.TableSource(docs, sp)))))
+      def store = docStore(docs, t)
       vidxFromPristine(s, "q179vidx", dir, t, Seq(s"$t:n_chars"), 8)(store)
       store.withValueIndex(t)
         .pullMany(
@@ -2710,10 +2572,6 @@ object SparkEntry {
     // watermark advancement points) are deterministic.
     "q76_stream_firstseen" -> ((s, dir) => withShuffle(s, 8) {
       import s.implicits._
-      import java.nio.file.Paths
-      val in = scratch("q76in", dir)
-      val outp = scratch("q76out", dir)
-      val ckpt = scratch("q76ckpt", dir)
       // one row per distinct fingerprint (min id), so which-copy-wins
       // inside a batch can never make the output nondeterministic.
       // All three microbatch frames are pure functions of the sf dir:
@@ -2736,38 +2594,23 @@ object SparkEntry {
           2, "2024-01-01 01:00:00")),
         stagedInput("q76b3", dir)(
           stamped(uniq, 3, "2024-01-01 02:00:00")))
-      def feed(src: String): Unit =
-        copyRec(Paths.get(src), Paths.get(in))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, text STRING, batch BIGINT, ts TIMESTAMP")
-      def startStream() = graft.streaming.StreamingDedup.firstSeen(
-          s.readStream.schema(schema).parquet(in),
-          "text", "ts", watermarkDelay = "10 minutes")
-        .writeStream.format("parquet")
-        .option("path", outp).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
       // batch 1 (every distinct doc first-seen at T0) is pure state
       // seeding + deterministic emissions — a function of the sf dir,
-      // run ONCE per (tag, sf); reps restore the after-batch-1 world
-      // (durable file sink, committed offsets) and run only the
+      // staged once per (tag, sf); reps restore the after-batch-1 world
+      // (durable file sink, committed offsets) and replay only the
       // watermark-expiry choreography that IS the test: the sentinel
       // advancing past T0+10min evicting state, the T0+2h re-emit
-      val staged = stagedStreamState("q76s1", dir,
-        "fsv1 wm=10m " + s"b1=${treeFingerprint(batches(0))}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        java.nio.file.Files.createDirectories(Paths.get(in))
-        feed(batches(0))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
+      val run = replay("q76", dir, "fsv1 wm=10m", batches) { r =>
+        graft.streaming.StreamingDedup.firstSeen(
+            s.readStream.schema(
+              "doc_id BIGINT, text STRING, batch BIGINT, ts TIMESTAMP")
+              .parquet(r.in),
+            "text", "ts", watermarkDelay = "10 minutes")
+          .writeStream.format("parquet")
+          .option("path", r.out).option("checkpointLocation", r.ckpt)
+          .outputMode("append").start()
       }
-      staged.restore()
-      val q = startStream()
-      try {
-        feed(batches(1)); q.processAllAvailable()
-        feed(batches(2)); q.processAllAvailable()
-      } finally q.stop()
-      s.read.parquet(outp).select(col("doc_id"), col("batch"))
+      s.read.parquet(run.out).select(col("doc_id"), col("batch"))
     }),
 
     // streaming NEAR-dup first-seen (SimHash 4×16-bit bands,
@@ -2783,10 +2626,6 @@ object SparkEntry {
     // batch = -1 and fail the row compare. foreachBatch emits survivors
     // in their arrival batch, so no sentinel flush is needed.
     "q103_stream_neardup" -> ((s, dir) => withShuffle(s, 8) {
-      import java.nio.file.Paths
-      val in = scratch("q103in", dir)
-      val outp = scratch("q103out", dir)
-      val ckpt = scratch("q103ckpt", dir)
       val ids = Tpch.raw(s, dir, "documents").select(col("doc_id")).distinct()
       val off = ids.agg(max(col("doc_id"))).head.getLong(0) + 1
       def synth(prefix: String) = concat_ws(" ",
@@ -2810,47 +2649,30 @@ object SparkEntry {
             synth("f").as("text"))
         withTs(copies.unionAll(fresh), "2024-01-01 00:01:00")
       }
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, text STRING, ts TIMESTAMP")
-      def startStream() = {
-        val stream = s.readStream.schema(schema).parquet(in)
-        val verdicts = graft.streaming.StreamingDedup
-          .firstSeenNearVerdicts(
-            stream, "doc_id", "text", "ts", watermarkDelaySeconds = 600)
-        verdicts.writeStream
-          .option("checkpointLocation", ckpt)
+      // batch 1 (every distinct doc — the corpus whose signatures seed
+      // the first-seen state) is a pure function of the sf dir: staged
+      // once per (tag, sf); reps restore the after-batch-1 world
+      // (input, checkpoint, verdict output) and replay only batch 2 —
+      // the copies-vs-fresh verdicts that ARE the cross-batch near-dup
+      // semantics under test (q110's staging discipline)
+      val run = replay("q103", dir, "ndv2 wm=600", Seq(b1, b2)) { r =>
+        graft.streaming.StreamingDedup.firstSeenNearVerdicts(
+            s.readStream.schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
+              .parquet(r.in),
+            "doc_id", "text", "ts", watermarkDelaySeconds = 600)
+          .writeStream
+          .option("checkpointLocation", r.ckpt)
           // batchId-keyed overwrite = replay-idempotent (q110's sink
           // discipline): a batch re-executed after a crash-restart
           // rewrites ITS directory instead of double-appending
           .foreachBatch { (b: DataFrame, batchId: Long) =>
             graft.streaming.StreamingDedup
               .combineNearVerdicts(b, "doc_id", "ts")
-              .write.mode("overwrite").parquet(s"$outp/batch_$batchId")
+              .write.mode("overwrite").parquet(s"${r.out}/batch_$batchId")
           }
           .outputMode("append").start()
       }
-      // batch 1 (every distinct doc — the corpus whose signatures seed
-      // the first-seen state) is a pure function of the sf dir: it runs
-      // ONCE per (tag, sf); reps restore the after-batch-1 world
-      // (input, checkpoint, verdict output) and execute only batch 2 —
-      // the copies-vs-fresh verdicts that ARE the cross-batch near-dup
-      // semantics under test (q110's staging discipline)
-      val staged = stagedStreamState("q103s1", dir,
-        "ndv2 wm=600 " + s"b1=${treeFingerprint(b1)}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        java.nio.file.Files.createDirectories(Paths.get(in))
-        copyRec(Paths.get(b1), Paths.get(in))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
-      }
-      staged.restore()
-      val q = startStream()
-      try {
-        copyRec(Paths.get(b2), Paths.get(in))
-        q.processAllAvailable()
-      } finally q.stop()
-      s.read.parquet(outp + "/batch_*").select(col("doc_id"),
+      s.read.parquet(run.out + "/batch_*").select(col("doc_id"),
         when(col("doc_id") < off, 1L)
           .when(col("doc_id") < 2 * off, -1L)
           .otherwise(2L).as("batch"))
@@ -3194,11 +3016,7 @@ object SparkEntry {
         .select(h.as("h"), substring(h, 1, 1).as("bucket"))
         .groupBy(col("bucket"))
         .agg(graft.ops.Sketches.kmvAgg(64, col("h")).as("sketch"))
-      val name = "q140_mem_" + System.nanoTime()
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      drainSink(s, name)(df =>
+      drain("q140", agg)(df =>
         graft.ops.Sketches.kmvEstimate(
           df.select(explode(col("sketch")).as("h"))
             .distinct().orderBy(col("h")).limit(64), 64))
@@ -3382,11 +3200,7 @@ object SparkEntry {
         stream, "user_id", "ts", "event_type",
         Seq("view", "click", "purchase"), withinSeconds = 86400L,
         watermarkDelay = Some("3650 days"))
-      val name = "q151_mem_" + System.nanoTime()
-      val q = prog.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try q.processAllAvailable() finally q.stop()
-      drainSink(s, name)(df => df
+      drain("q151", prog.toDF(), "update")(df => df
         .where(col("t_1").isNotNull)
         .select(col("user_id"),
           col("t_1").cast("timestamp_ntz").as("t_1"),
@@ -3410,10 +3224,6 @@ object SparkEntry {
     // evicting.
     "q161_stream_funnel_evict" -> ((s, dir) => withShuffle(s, 8) {
       import s.implicits._
-      import java.nio.file.Paths
-      val in = scratch("q161in", dir)
-      val outp = scratch("q161out", dir)
-      val ckpt = scratch("q161ckpt", dir)
       // the four microbatch frames are pure functions of the sf dir —
       // staged once per (batch, sf) behind stamped _OK markers; each
       // rep HARDLINKS a batch's files into the input dir between
@@ -3438,21 +3248,23 @@ object SparkEntry {
           evts("2024-01-01 02:00:00", "view", users)
             .unionAll(evts("2024-01-01 02:01:00", "click", users))
             .unionAll(evts("2024-01-01 02:02:00", "purchase", users))))
-      def feed(src: String): Unit =
-        copyRec(Paths.get(src), Paths.get(in))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, ts TIMESTAMP, event_type STRING")
-      // update-mode sink as a foreachBatch parquet append: the memory
+      // batch 1 (view+click for every user — the chains the later
+      // batches age out and restart) is a pure function of the sf dir:
+      // staged once per (tag, sf); reps restore the after-batch-1
+      // world and replay only the eviction choreography under test.
+      // Update-mode sink as a foreachBatch parquet append: the memory
       // sink in update mode appends each batch's update rows to its
       // table — an append-parquet write of the same rows is the exact
       // durable equivalent, and it makes batch 1 stageable
-      def startStream() = {
-        val stream = s.readStream.schema(schema).parquet(in)
+      val run = replay("q161", dir, "fev3 within=300 wm=10m", batches) { r =>
         graft.streaming.StreamingFunnel.funnelProgress(
-            stream, "user_id", "ts", "event_type",
+            s.readStream
+              .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
+              .parquet(r.in),
+            "user_id", "ts", "event_type",
             Seq("view", "click", "purchase"), withinSeconds = 300L,
             watermarkDelay = Some("10 minutes"))
-          .toDF().writeStream.option("checkpointLocation", ckpt)
+          .toDF().writeStream.option("checkpointLocation", r.ckpt)
           // batchId-keyed overwrite = replay-idempotent (q110's sink
           // discipline — see q103)
           .foreachBatch { (b: DataFrame, batchId: Long) =>
@@ -3464,34 +3276,14 @@ object SparkEntry {
             // current choreography does, but the sink discipline now
             // defends the invariant instead of assuming it)
             b.withColumn("_bid", lit(batchId))
-              .write.mode("overwrite").parquet(s"$outp/batch_$batchId")
+              .write.mode("overwrite").parquet(s"${r.out}/batch_$batchId")
           }
           .outputMode("update").start()
       }
-      // batch 1 (view+click for every user — the chains the later
-      // batches age out and restart) is a pure function of the sf dir:
-      // staged once per (tag, sf); reps restore the after-batch-1
-      // world and run only the eviction choreography under test
-      val staged = stagedStreamState("q161s1", dir,
-        "fev3 within=300 wm=10m " + s"b1=${treeFingerprint(batches(0))}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        java.nio.file.Files.createDirectories(Paths.get(in))
-        feed(batches(0))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
-      }
-      staged.restore()
-      val q = startStream()
-      try {
-        feed(batches(1)); q.processAllAvailable()
-        feed(batches(2)); q.processAllAvailable()
-        feed(batches(3)); q.processAllAvailable()
-      } finally q.stop()
       // dedup-on-read: max-batchId row per user (map-side-combinable
       // max_by, no window) BEFORE the completion projection — a funnel
       // re-emitted after completion can no longer appear twice
-      s.read.parquet(outp + "/batch_*")
+      s.read.parquet(run.out + "/batch_*")
         .groupBy(col("user_id"))
         .agg(max_by(struct(col("t_1"), col("t_2"), col("t_3"),
           col("converted")), col("_bid")).as("_m"))
@@ -3516,10 +3308,6 @@ object SparkEntry {
     // nothing and the row counts halve.
     "q162_stream_upsert_ttl" -> ((s, dir) => withShuffle(s, 4) {
       import s.implicits._
-      import java.nio.file.Paths
-      val in = scratch("q162in", dir)
-      val outp = scratch("q162out", dir)
-      val ckpt = scratch("q162ckpt", dir)
       // same staging discipline as q161: four pure-function-of-sf
       // batches built once behind _OK stamps, hardlinked per rep
       lazy val ids = Tpch.raw(s, dir, "documents")
@@ -3539,10 +3327,19 @@ object SparkEntry {
             "2024-01-01 01:10:00")),
         stagedInput("q162b4", dir)(
           batch(ids, "v1", "2024-01-01 02:00:00")))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "id BIGINT, status STRING, ts TIMESTAMP")
-      def startStream() = {
-        val stream = s.readStream.schema(schema).parquet(in)
+      // batch 1 (every distinct doc at T0) is pure state setup: its
+      // per-(e,a) emissions and RocksDB state are functions of the sf
+      // dir alone, so it is staged once per (tag, sf); each rep restores
+      // the after-batch-1 world (input dir, checkpoint, sink output —
+      // a durable file sink, the production shape, so the restarted
+      // query resumes the committed offset log) and replays only the
+      // batches whose emissions ARE the TTL semantics under test:
+      // watermark advancement past T0+ttl expiring batch-1 state, and
+      // the re-assert at T0+2h re-emitting. The TTL timeout is
+      // EVENT-time, so a staged world restored later is unaffected.
+      val run = replay("q162", dir, "ttlv1 wm=10m ttl=300 sp=4", batches) { r =>
+        val stream = s.readStream
+          .schema("id BIGINT, status STRING, ts TIMESTAMP").parquet(r.in)
         val spec = graft.sources.RowIngest.specFor(
           stream.toDF(), "doc", Seq("id"))
         val triples = graft.streaming.StreamingAssert
@@ -3552,38 +3349,10 @@ object SparkEntry {
             triples, watermarkDelay = "10 minutes",
             stateTtlSeconds = Some(300L))
           .toDF().writeStream.format("parquet")
-          .option("path", outp).option("checkpointLocation", ckpt)
+          .option("path", r.out).option("checkpointLocation", r.ckpt)
           .outputMode("append").start()
       }
-      // batch 1 (every distinct doc at T0) is pure state setup: its
-      // per-(e,a) emissions and RocksDB state are functions of the sf
-      // dir alone, so it runs ONCE per (tag, sf); each rep restores
-      // the after-batch-1 world (input dir, checkpoint, sink output —
-      // a durable file sink, the production shape, so the restarted
-      // query resumes the committed offset log) and executes only the
-      // batches whose emissions ARE the TTL semantics under test:
-      // watermark advancement past T0+ttl expiring batch-1 state, and
-      // the re-assert at T0+2h re-emitting. The TTL timeout is
-      // EVENT-time, so a staged world restored later is unaffected.
-      val staged = stagedStreamState("q162s1", dir,
-        "ttlv1 wm=10m ttl=300 sp=4 " + s"b1=${treeFingerprint(batches(0))}",
-        capture = Seq((in, "in"), (ckpt, "ckpt"), (outp, "out"))) {
-        for (d <- Seq(in, outp, ckpt)) deleteRec(Paths.get(d))
-        java.nio.file.Files.createDirectories(Paths.get(in))
-        copyRec(Paths.get(batches(0)), Paths.get(in))
-        val q = startStream()
-        try q.processAllAvailable() finally q.stop()
-      }
-      staged.restore()
-      def feed(src: String): Unit =
-        copyRec(Paths.get(src), Paths.get(in))
-      val q = startStream()
-      try {
-        feed(batches(1)); q.processAllAvailable()
-        feed(batches(2)); q.processAllAvailable()
-        feed(batches(3)); q.processAllAvailable()
-      } finally q.stop()
-      s.read.parquet(outp)
+      s.read.parquet(run.out)
         .where(col("value") =!= "sentinel")
         .select(col("e"), col("value"), col("atMicros").as("at_us"))
     }),
@@ -3619,11 +3388,7 @@ object SparkEntry {
           md5(col("user_id").cast("string")).as("h"))
         .groupBy(col("w"))
         .agg(graft.ops.Sketches.kmvAgg(64, col("h")).as("sk"))
-      val name = "q148_mem_" + System.nanoTime()
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      drainSink(s, name)(_.select(
+      drain("q148", agg)(_.select(
         col("w.start").cast("timestamp_ntz").as("day"),
         graft.ops.Sketches.kmvEstimateCol(col("sk"), 64).as("est")))
     }),
@@ -3719,12 +3484,7 @@ object SparkEntry {
       // corpus-size-independent, and this was the suite's largest
       // IO-bound line item
       val ev = Tpch.raw(s, dir, "events").where(col("event_id") % 3 === 0)
-      val sp = Tpch.spec(ev, "events")
-      val ts = new TripleStore(s,
-        graft.sources.RowIngest.tableToTriples(ev, sp), sp.attrSchemas,
-        preResolved = true,
-        source = Some(graft.model.UnionTripleSource(
-          Seq(graft.sources.RowIngest.TableSource(ev, sp)))))
+      val ts = RowIngest.store(Seq(ev -> Tpch.spec(ev, "events")))
       graft.sources.DocIngest.dumpEavJsonl(ts.resolved, out)
       // one-pass read via the dump's schema sidecar (no inference scan)
       graft.sources.DocIngest.loadEavJsonl(s, out).select(

@@ -143,7 +143,10 @@ object Multimodal {
               img.getColorModel.getNumComponents.toFloat, mr, mg, mb,
               0.299f * mr + 0.587f * mg + 0.114f * mb, w.toFloat / h)
           }
-        } catch { case _: Exception => failed.clone() }
+        } catch {
+          // validates untrusted bytes: corrupt → the all -1 fail row
+          case _: Exception => failed.clone()
+        }
       }
   }
 
@@ -284,6 +287,7 @@ object Multimodal {
             }
           } finally ais.close()
         } catch {
+          // validates untrusted bytes: corrupt → the "unreadable" row
           case _: Exception => Row(r.getLong(0), -1, 0L, 0L, "unreadable")
         }
       }

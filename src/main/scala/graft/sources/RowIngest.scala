@@ -143,10 +143,11 @@ object RowIngest {
     * the txId of any eagerly-built `triples` frame handed to the same
     * store, or the two scan paths (pruned source scan vs materialized
     * relation) would disagree on transaction identity: vidxappend's
-    * batch stores stamp tx = maxTx+1 here so the appended index rows
-    * carry the tx that compact's latest-txId reconciliation needs to
-    * beat the build rows (a 0-stamped re-assert would TIE them and
-    * the stale value could survive its own upsert). */
+    * batch stores stamp tx = maxTx+1 so the appended index rows carry
+    * the tx that compact's latest-txId reconciliation needs to beat
+    * the build rows (a 0-stamped re-assert would TIE them and the
+    * stale value could survive its own upsert). [[store]] passes one
+    * `txId` to both paths, so they match by construction. */
   final case class TableSource(df: DataFrame, spec: TableSpec,
       txId: Long = 0L)
       extends graft.model.TripleSource {
@@ -155,5 +156,21 @@ object RowIngest {
     // tableToTriples emits db:ident per entity (metaStructs) — the
     // contract holds by construction, no runtime probe needed
     override def assertsIdents: Boolean = true
+  }
+
+  /** THE table-backed store: the lazy union of each table's triples, the
+    * merged attribute schemas, and one attribute-pruning [[TableSource]]
+    * per table. Both scan paths are stamped with the same `txId`, by
+    * construction. Single-tx ingest of distinct rows ⇒ the store's
+    * invariants hold, so it is `preResolved`. */
+  private[graft] def store(tables: Seq[(DataFrame, TableSpec)],
+      txId: Long = 0L): graft.TripleStore = {
+    val triples = tables.map { case (df, sp) => tableToTriples(df, sp, txId) }
+      .reduce(_ unionByName _)
+    val schemas = tables.map(_._2.attrSchemas).reduce(_ ++ _)
+    val src = graft.model.UnionTripleSource(
+      tables.map { case (df, sp) => TableSource(df, sp, txId) })
+    new graft.TripleStore(tables.head._1.sparkSession, triples, schemas,
+      preResolved = true, source = Some(src))
   }
 }

@@ -170,29 +170,15 @@ object Tpch {
     }
   }
 
-  /** Triple encoding of a table. Deliberately NOT persisted: the triples
-    * view is a 10-20× blow-up of the base table, and the narrow flatten
-    * recomputes from the columnar scan far cheaper than caching the
-    * blow-up — the 100 TB-correct trade. Per-attribute pruning happens
-    * via TableSource (see store()). */
-  def triples(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val df = raw(spark, sfDir, table)
-    RowIngest.tableToTriples(df, spec(df, table))
-  }
-
   /** A TripleStore over the union of the given tables' triples, backed by
     * attribute-pruning TableSources so each operator only generates the
-    * triples it reads. */
-  def store(spark: SparkSession, sfDir: String, tables: String*): graft.TripleStore = {
-    val ts = tables.map(triples(spark, sfDir, _)).reduce(_ unionByName _)
-    val schemas = tables.map(t => spec(raw(spark, sfDir, t), t).attrSchemas)
-      .reduce(_ ++ _)
-    val src = graft.model.UnionTripleSource(tables.map { t =>
+    * triples it reads. The triples are deliberately NOT persisted: they
+    * are a 10-20× blow-up of the base tables, and the narrow flatten
+    * recomputes from the columnar scan far cheaper than caching the
+    * blow-up — the 100 TB-correct trade. */
+  def store(spark: SparkSession, sfDir: String, tables: String*): graft.TripleStore =
+    RowIngest.store(tables.map { t =>
       val df = raw(spark, sfDir, t)
-      RowIngest.TableSource(df, spec(df, t))
+      (df, spec(df, t))
     })
-    // single-tx ingest of distinct rows ⇒ invariants hold by construction
-    new graft.TripleStore(spark, ts, schemas, preResolved = true,
-      source = Some(src))
-  }
 }

@@ -628,13 +628,8 @@ object Cli {
           val p = a.indexPath
             .getOrElse(sys.error("vidxbuild needs --index-path"))
           require(a.cols.nonEmpty, "vidxbuild needs --cols <numeric col,...>")
-          val sp = graft.sources.RowIngest.specFor(df, t, Seq(a.idCol),
-            Nil, None)
-          val store = new TripleStore(spark,
-            graft.sources.RowIngest.tableToTriples(df, sp), sp.attrSchemas,
-            preResolved = true,
-            source = Some(graft.model.UnionTripleSource(
-              Seq(graft.sources.RowIngest.TableSource(df, sp)))))
+          val store = graft.sources.RowIngest.store(Seq(
+            df -> graft.sources.RowIngest.specFor(df, t, Seq(a.idCol))))
           val attrs = a.cols.map(c => s"$t:$c")
           graft.ValueIndex.build(store, t, p, attrs,
             a.buckets.getOrElse(64))
@@ -658,27 +653,19 @@ object Cli {
         // same "<table>:<col>" attrs the build indexed.
         case "vidxappend" =>
           val t = a.table.getOrElse(sys.error("vidxappend needs --table"))
-          val sp = graft.sources.RowIngest.specFor(df, t, Seq(a.idCol),
-            Nil, None)
           // stamp the batch PAST every txId already indexed —
           // vidxcompact reconciles re-asserted keys latest-txId-wins,
           // and a batch ingested at the default tx 0 would TIE the
           // build rows (the stale value could survive its own upsert).
           // The max comes from the MANIFEST's maxtx bookkeeping:
           // O(manifest), never a corpus scan — append must stay
-          // O(batch) at any index size
+          // O(batch) at any index size. RowIngest.store stamps the
+          // pruned source path (the one ValueIndex.append scans) with
+          // the same tx as the eager triples.
           val tx = graft.ValueIndex.maxTx(spark, t) + 1L
-          val batch = new TripleStore(spark,
-            graft.sources.RowIngest.tableToTriples(df, sp, txId = tx),
-            sp.attrSchemas,
-            preResolved = true,
-            // the SOURCE stamps tx too: ValueIndex.append scans through
-            // the pruned source path, not the eager triples frame — an
-            // unstamped source would emit tx-0 rows that TIE the build
-            // rows at compact's latest-txId reconciliation (caught by
-            // CliSpec's re-assert-then-compact stats check)
-            source = Some(graft.model.UnionTripleSource(
-              Seq(graft.sources.RowIngest.TableSource(df, sp, tx)))))
+          val batch = graft.sources.RowIngest.store(Seq(
+            df -> graft.sources.RowIngest.specFor(df, t, Seq(a.idCol))),
+            txId = tx)
           graft.ValueIndex.append(batch, t)
           // receipt from the MANIFEST (same O(manifest) read the tx
           // stamp does) — the v4 receipt's full-index grouped count

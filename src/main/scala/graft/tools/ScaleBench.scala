@@ -121,13 +121,8 @@ object ScaleBench {
     * numeric cardinality-one attr. */
   private def docStore(docs: DataFrame): graft.TripleStore = {
     val df = docs.withColumn("n_chars", length(col("text")))
-    val sp = graft.sources.RowIngest.specFor(df, "documents",
-      Seq("doc_id"), Nil, None)
-    new graft.TripleStore(df.sparkSession,
-      graft.sources.RowIngest.tableToTriples(df, sp), sp.attrSchemas,
-      preResolved = true,
-      source = Some(graft.model.UnionTripleSource(
-        Seq(graft.sources.RowIngest.TableSource(df, sp)))))
+    graft.sources.RowIngest.store(Seq(
+      df -> graft.sources.RowIngest.specFor(df, "documents", Seq("doc_id"))))
   }
 
   /** Write the 4 value-DRIFTED batches of the fragmentation study to
@@ -176,15 +171,9 @@ object ScaleBench {
       .withValueIndex(table)
 
   /** Same, for the (event_id, user_id, ts, value) events frame. */
-  private def eventStore(ev: DataFrame): graft.TripleStore = {
-    val sp = graft.sources.RowIngest.specFor(ev, "events",
-      Seq("event_id"), Nil, None)
-    new graft.TripleStore(ev.sparkSession,
-      graft.sources.RowIngest.tableToTriples(ev, sp), sp.attrSchemas,
-      preResolved = true,
-      source = Some(graft.model.UnionTripleSource(
-        Seq(graft.sources.RowIngest.TableSource(ev, sp)))))
-  }
+  private def eventStore(ev: DataFrame): graft.TripleStore =
+    graft.sources.RowIngest.store(Seq(
+      ev -> graft.sources.RowIngest.specFor(ev, "events", Seq("event_id"))))
 
   def main(args: Array[String]): Unit = {
     var positional = List.empty[String]

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SparkEntry's build-once staging recipe (`stage`) and the per-run
-  * working copy a mutating consumer of a staged index gets. */
+/** SparkEntry's build-once staging recipe (`stage`), the staged-world
+  * stream run built on it (`replay`), and the per-run working copy a
+  * mutating consumer of a staged index gets. */
 class StageSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
@@ -86,6 +87,57 @@ class StageSpec extends AnyFunSuite {
     assert(builds === 2)
     assert(marker(p).startsWith("v1 src="))
     cleanup(p, Seq(""))
+  }
+
+  test("replay: stages batch 1 once, then every call restores the " +
+      "staged world and executes only the later batches") {
+    val dir = sfDir()
+    val inputs = Files.createTempDirectory("graft_stagespec_rp_in")
+    val batches = Seq(1L to 3L, 4L to 5L).zipWithIndex.map { case (r, i) =>
+      val p = inputs.resolve(s"b$i").toString
+      r.toDF("k").write.parquet(p)
+      p
+    }
+    var prepares = 0
+    var restores = 0
+    val ran = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def call(): SparkEntry.RunDirs = {
+      ran.clear()
+      SparkEntry.replay("stagespec_rp", dir, "v1", batches,
+        prepare = prepares += 1, afterRestore = restores += 1) { r =>
+        spark.readStream.schema("k BIGINT").parquet(r.in)
+          .writeStream.option("checkpointLocation", r.ckpt)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            ran.synchronized(ran += id)
+            b.write.mode("overwrite").parquet(s"${r.out}/batch_$id")
+          }.start()
+      }
+    }
+    def output(r: SparkEntry.RunDirs): Map[String, Seq[Long]] =
+      Seq(0, 1).map(id => s"batch_$id" ->
+        spark.read.parquet(s"${r.out}/batch_$id").as[Long].collect()
+          .toSeq.sorted).toMap
+
+    val first = call()
+    assert(prepares === 1 && restores === 1)
+    // staging ran batch 0 (batch 1's files); the replay ran batch 1
+    assert(ran.toSeq === Seq(0L, 1L))
+    val root =
+      first.in.replace("_stagespec_rpin_", "_stagespec_rps1_staged_")
+    assert(marker(root).startsWith("stagespec_rps1 streamstagev2 v1 b1="))
+    val staged = output(first)
+    assert(staged === Map("batch_0" -> Seq(1L, 2L, 3L),
+      "batch_1" -> Seq(4L, 5L)))
+
+    val second = call()
+    assert(second === first)
+    assert(prepares === 1 && restores === 2)
+    // the restored checkpoint knows batch 0: only batch 1 executes
+    assert(ran.toSeq === Seq(1L))
+    assert(output(second) === staged)
+    for (p <- Seq(first.in, first.out, first.ckpt))
+      SparkEntry.deleteRec(Paths.get(p))
+    cleanup(root, Seq(""))
   }
 
   test("workingCopy: writes into a mutating consumer's copy leave the " +
